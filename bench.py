@@ -1,7 +1,13 @@
 """Benchmark harness: runs the headline golden queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "extended": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "extended": {name: sec}, "extended_total": sec,
+"sf": ...}.
+
+``python bench.py NAME...`` instead times just the named goldens in one
+fresh JVM (run it once per A/B side), each with its set's method —
+headline best-of-3, extended warm median-of-3 — and prints
+{"mode": "named", "queries": {name: sec}}.
 
 Isolation (VERDICT r6 next-#3): the headline set and the extended heavy set
 each run in their OWN fresh process/JVM, spawned by this orchestrator with
@@ -23,125 +29,109 @@ import os
 import subprocess
 import sys
 import time
+from statistics import median
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 _MODE_VAR = "SPARK_GRAFT_BENCH_MODE"
 
 
-def _run_headline(spark, sf_dir: str) -> dict[str, float]:
-    from mr_dice_spark.golden import GOLDEN, bench_queries
-
-    # warmup: JVM + codegen + parquet footer caches
-    GOLDEN["q01_pricing_summary"].spark(spark, sf_dir).count()
-
-    timings: dict[str, float] = {}
-    for name, q in sorted(bench_queries().items()):
-        # min of repeated runs reflects steady-state throughput (what a
-        # resident engine sees); the first run pays one-off codegen.
-        # Materialize through the noop sink: count() alone would let
-        # Catalyst prune the aggregate/projection expressions it doesn't
-        # need for row counting, under-measuring the query.
-        # row count first: a sanity signal AND a per-query warmup, so the
-        # timed runs never pay codegen compilation or re-execute afterwards
-        n = q.spark(spark, sf_dir).count()
-        best = None
-        # best-of-3: measured run-to-run noise on this box is ~±20%; the
-        # min of three is a materially tighter steady-state estimate than
-        # min of two for ~15s of extra bench wall clock
-        for _ in range(3):
-            # operators persist() shared sub-frames, and Spark's cache
-            # manager matches canonicalized plans — without clearing, the
-            # second run would read the first run's cache and under-measure
-            spark.catalog.clearCache()
-            # localCheckpoint blocks (minhash's shingle materialization)
-            # are freed by the ContextCleaner only after a GC notices the
-            # dead RDD refs; nudge so queries later in the alphabet don't
-            # pay earlier queries' storage debt (same fix as scale_probe)
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            df = q.spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            el = time.perf_counter() - t0
-            best = el if best is None or el < best else best
-        timings[name] = round(best, 4)
-        print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
-    return timings
+def _timed_run(spark, q, sf_dir: str) -> float:
+    """One fully materialized run, in seconds. Materialize through the
+    noop sink: count() alone would let Catalyst prune the aggregate/
+    projection expressions it doesn't need for row counting."""
+    # operators persist() shared sub-frames, and Spark's cache manager
+    # matches canonicalized plans — without clearing, a run would read the
+    # previous run's cache and under-measure. localCheckpoint blocks are
+    # freed by the ContextCleaner only after a GC notices the dead RDD
+    # refs; nudge so queries later in the alphabet don't pay earlier
+    # queries' storage debt (same fix as scale_probe)
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+    t0 = time.perf_counter()
+    q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
 
 
-def _run_extended(spark, sf_dir: str) -> dict[str, float]:
-    # Extended set: the round-5+ heavy operator families (fuzzy join,
-    # graph, ER, winnowing overlap, BPE train, LSH clustering). Reported
+def _best_of_3(spark, name: str, q, sf_dir: str) -> float:
+    # Headline method. Row count first: a sanity signal AND a per-query
+    # warmup, so the timed runs never pay codegen compilation. Min of
+    # repeated runs reflects steady-state throughput (what a resident
+    # engine sees); measured run-to-run noise on this box is ~±20%, and
+    # the min of three is a materially tighter estimate than min of two.
+    n = q.spark(spark, sf_dir).count()
+    samples = [_timed_run(spark, q, sf_dir) for _ in range(3)]
+    print(f"# {name}: {min(samples):.3f}s (best-of-3, {n} rows) "
+          f"samples={[round(t, 3) for t in samples]}", file=sys.stderr)
+    return round(min(samples), 4)
+
+
+def _warm_median_of_3(spark, name: str, q, sf_dir: str) -> float:
+    # Extended method: the round-5+ heavy operator families (fuzzy join,
+    # graph, ER, winnowing overlap, BPE train, LSH clustering), reported
     # under a separate key so the headline total stays comparable to
     # rounds 1-5.
     #
     # WARM CONVENTION (VERDICT r7 next-#5): every entry runs once
     # UNTIMED first — that run absorbs the query's own codegen
-    # compilation and JIT warmth — then caches are cleared so the timed
-    # runs re-execute the full scan->shuffle->sink pipeline with a warm
-    # JVM. Rationale: the r7 fresh-JVM isolation split exposed ~20%
-    # cold-JIT inflation on the python-heavy entries (bpe_train
-    # 5.1->6.4 s, er_best_match 4.0->4.8 s r6->r7 — the old shared JVM
-    # had 60+ headline executions of warmth; PERFORMANCE.md:1313-1325),
-    # so cross-round extended comparisons were dominated by warmup
-    # noise, not code. Correctness of every entry is the sweep/driver's
-    # job, not bench's.
+    # compilation and JIT warmth — so the timed runs re-execute the full
+    # scan->shuffle->sink pipeline with a warm JVM. The r7 fresh-JVM
+    # isolation split exposed ~20% cold-JIT inflation on the
+    # python-heavy entries (PERFORMANCE.md:1313-1325).
     #
-    # WARM-MEDIAN-3 for EVERY entry (VERDICT r9 next-#3, widening the r8
-    # >= 15 s rule): two consecutive rounds burned a judge/builder cycle
-    # adjudicating one-draw ambient outliers — triangle_counts 29.2 s in
-    # r8 (19.5 s warm-median locally), label_propagation 10.88 s in r9
-    # (8.6 s warm-median) — and the second sat BELOW the old 15 s cutoff,
-    # i.e. single warm samples maximized draw variance exactly where
-    # round-over-round ratios get scrutinized. So: one untimed warmup,
-    # then three timed runs, median reported, for every extended entry
-    # (~70 s of extra bench wall clock once per round — cheap next to
-    # the recurring adjudication cost).
-    from statistics import median
+    # WARM-MEDIAN-3 for EVERY entry (VERDICT r9 next-#3): single warm
+    # samples maximized draw variance exactly where round-over-round
+    # ratios get scrutinized (triangle_counts 29.2 s in r8 vs 19.5 s
+    # warm-median; label_propagation 10.88 s in r9 vs 8.6 s).
+    _timed_run(spark, q, sf_dir)
+    samples = [_timed_run(spark, q, sf_dir) for _ in range(3)]
+    print(f"# ext {name}: {median(samples):.3f}s (warm median-of-3) "
+          f"samples={[round(t, 3) for t in samples]}", file=sys.stderr)
+    return round(median(samples), 4)
 
+
+def _run(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
+    """Time each named golden with its set's method: warm median-of-3 for
+    the extended set, best-of-3 for everything else."""
     from mr_dice_spark.golden import GOLDEN, bench_extended_queries
 
+    # warmup: JVM + codegen + parquet footer caches
     GOLDEN["q01_pricing_summary"].spark(spark, sf_dir).count()
-
-    def _one_run(q, timed: bool) -> float | None:
-        # operators persist() shared sub-frames and localCheckpoint
-        # blocks linger until a GC notices dead RDD refs — clear both
-        # before EACH run so the timed run measures real execution,
-        # not the warm run's cache (same discipline as headline)
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        df = q.spark(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0 if timed else None
-
-    extended: dict[str, float] = {}
-    for name, q in sorted(bench_extended_queries().items()):
-        _one_run(q, timed=False)
-        samples = [_one_run(q, timed=True) for _ in range(3)]
-        extended[name] = round(median(samples), 4)
-        print(
-            f"# ext {name}: {extended[name]:.3f}s (warm median-of-3)",
-            file=sys.stderr,
+    extended = set(bench_extended_queries())
+    return {
+        name: (_warm_median_of_3 if name in extended else _best_of_3)(
+            spark, name, GOLDEN[name], sf_dir
         )
-    return extended
+        for name in names
+    }
 
 
-def _phase_main(mode: str, sf_dir: str, sf: str) -> None:
+def _phase_main(mode: str, names: list[str], sf_dir: str) -> None:
     from mr_dice_spark.session import get_spark
 
     spark = get_spark(app_name=f"mr-dice-bench-{mode}")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = _run_headline(spark, sf_dir) if mode == "headline" else _run_extended(spark, sf_dir)
-    print(json.dumps({"mode": mode, "queries": queries}))
+    print(json.dumps({"mode": mode, "queries": _run(spark, sf_dir, names)}))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    names = sys.argv[1:]
+    if names:
+        from mr_dice_spark.golden import GOLDEN
+
+        unknown = sorted(n for n in names if n not in GOLDEN)
+        if unknown:
+            raise SystemExit(f"bench: unknown golden names {unknown}")
+        _phase_main("named", names, sf_dir)
+        return
     mode = os.environ.get(_MODE_VAR, "")
     if mode in ("headline", "extended"):
-        _phase_main(mode, sf_dir, sf)
+        from mr_dice_spark.golden import bench_extended_queries, bench_queries
+
+        phase_set = bench_queries() if mode == "headline" else bench_extended_queries()
+        _phase_main(mode, sorted(phase_set), sf_dir)
         return
 
     phase_out: dict[str, dict[str, float]] = {}

@@ -602,9 +602,8 @@ def bench_queries() -> dict[str, GoldenQuery]:
 # graph, ER linkage, winnowing overlap ranking, BPE training, LSH
 # clustering). Kept OUT of the headline `bench` flag so the headline
 # total stays comparable across rounds 1-6; bench.py reports them under
-# a separate "extended" key (best-of-1 — these run 5-35 s each at sf0.1,
-# so best-of-3 would triple the driver's bench wall clock for queries
-# whose run-to-run noise is already amortized by their length).
+# a separate "extended" key as a warm median-of-3 (one untimed warm run,
+# then three timed runs — see bench.py's _warm_median_of_3).
 BENCH_EXTENDED: tuple[str, ...] = (
     "fuzzy_name_join_k2",
     "triangle_counts_copurchase",

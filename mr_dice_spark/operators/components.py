@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mr_dice_spark.operators.graph import _node_side
+
 
 def connected_components(
     edges: DataFrame,
@@ -39,8 +41,6 @@ def connected_components(
     components would hand downstream dedup several "clusters" for one
     equivalence class with no error anywhere.
     """
-    from mr_dice_spark.operators.graph import _node_sized
-
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -50,11 +50,9 @@ def connected_components(
         # shuffle re-executes per action
         .localCheckpoint(eager=True)
     )
-    # broadcast/shuffle-hash decision for the node-sized label frame
-    # (r12, same _node_sized policy as the graph sweeps): the directed
-    # edge-row count bounds the vertex count at one ~10 ms job on the
-    # materialized RDD. Below the ceiling the per-sweep neighbor join
-    # broadcasts labels and THE EDGE LIST IS NEVER SHUFFLED (the old
+    # the directed edge-row count bounds the vertex count (graph's
+    # _node_side policy, r12): below the ceiling the per-sweep neighbor
+    # join broadcasts labels and THE EDGE LIST IS NEVER SHUFFLED (the old
     # stat-blind shape fell back to SortMergeJoin and re-exchanged sym
     # every sweep).
     n_bound = sym.count()
@@ -71,7 +69,7 @@ def connected_components(
         # result instead of re-joining new against old (r12: one
         # node-sized join and its exchanges removed per sweep).
         neighbor_labels = (
-            sym.join(_node_sized(labels.withColumnRenamed("id", "v"), n_bound), "v")
+            sym.join(_node_side(labels.withColumnRenamed("id", "v"), n_bound), "v")
             .select(F.col("u").alias("id"), "component")
             .withColumn("__own", F.lit(0))
         )

@@ -5,22 +5,88 @@ centrality over the crawl's host graph) are a standard crawl-curation
 quality input (the Common Crawl ranking family); the nearest reference
 analogue is nothing — it has no iterative graph surface. Together with
 ``operators.components`` this pins the repo's iterative-DataFrame
-pattern: bounded sweeps, one join + one aggregate per sweep, eager
-``localCheckpoint`` so plans don't grow with the iteration count.
+pattern: bounded sweeps, one join + one aggregate per sweep, an eager
+``localCheckpoint`` every ``_SWEEP_CKPT_EVERY`` sweeps (:func:`_sweep`;
+``k_core`` and ``connected_components`` pin every round) so plans don't
+grow with the iteration count.
 
-Scale shape per sweep: the contribution join shuffles on the source key
-and the aggregate on the destination key — the two exchanges any
-message-passing step costs; ranks and degrees are node-sized (orders of
-magnitude below the edge list). A FIXED iteration count (default 5)
-rather than a convergence test keeps the result deterministic and
-SQL-restatable (the oracle unrolls the same sweeps), which is how the
-golden hash-checks an iterative float algorithm.
+Every graph operator takes its policy decisions from the three helpers
+below: :func:`_node_side` (broadcast at or below ``_BCAST_MAX_ROWS``,
+shuffle_hash above), :func:`_undirected` (edge canonicalization) and
+:func:`_sweep` (checkpoint cadence).
+
+Scale shape per sweep: the edge list joins a node-sized frame (ranks,
+labels, degrees — orders of magnitude below the edge list) that rides a
+broadcast below the ceiling, then one node-keyed aggregate.
+A FIXED iteration count (default 5) rather than a convergence test keeps
+the result deterministic and SQL-restatable (the oracle unrolls the same
+sweeps), which is how the golden hash-checks an iterative float
+algorithm.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# Broadcast ceiling for every node-sized join side (guide §3.1). A
+# label/rank/degree frame of n nodes is ~32 B/row serialized, so 4M rows
+# is a ~128 MB broadcast — inside the guide's "a few hundred MB is usually
+# fine" band and far under the 8 GB hard cap; triangle counting's packed
+# out-adjacency frame is m longs in total, the same order. Below the
+# ceiling the sweep joins broadcast the node side and THE EDGE LIST IS
+# NEVER SHUFFLED (the r11 shuffle_hash shape still exchanged the full edge
+# list on the join key every sweep); above it, billion-node graphs keep
+# the shuffle_hash path, whose per-partition node-sized hash build always
+# fits. Callers pass an edge-row count as the bound: it is one ~10 ms
+# count on an already-materialized RDD, and every node owns >= 1 edge row.
+_BCAST_MAX_ROWS = 4_000_000
+
+# Checkpoint cadence for iterative sweeps (r12 optimization, guide §2.4/§5):
+# checkpointING EVERY sweep was the r5-r11 shape, and profiling the 4-sweep
+# copurchase golden at 32 cores showed it is why LPA ANTI-scaled (9.8 s at
+# 32c vs 6.3 s at 8c on the r11 driver): each eager checkpoint is its own
+# job materializing a 20k-row frame across 2x-cores partitions, so the
+# per-sweep fixed cost GROWS with core count while the data does not.
+# Checkpointing every 4th sweep instead bounds plan depth (<= 4 joins
+# between materializations — the same flat-plan guarantee, amortized) and
+# lets Spark run consecutive sweeps inside one job.
+_SWEEP_CKPT_EVERY = 4
+
+
+def _node_side(df: DataFrame, bound: int) -> DataFrame:
+    """Build side of a join whose row count is at most ``bound``:
+    broadcast at or below ``_BCAST_MAX_ROWS``, shuffle_hash above it."""
+    if bound <= _BCAST_MAX_ROWS:
+        return F.broadcast(df)
+    return df.hint("shuffle_hash")
+
+
+def _undirected(edges: DataFrame, a: Column, b: Column) -> DataFrame:
+    """Distinct canonical ``(a, b)`` pairs with ``a < b``: direction and
+    duplicates collapsed, self-loops dropped (``a != b`` also drops
+    NULLs). Callers type the endpoints through ``a``/``b``."""
+    return (
+        edges.select(a.alias("a"), b.alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .distinct()
+    )
+
+
+def _sweep(
+    state: DataFrame, step: Callable[[DataFrame], DataFrame], n_iter: int
+) -> DataFrame:
+    """``state`` after ``n_iter`` applications of ``step``, pinned every
+    ``_SWEEP_CKPT_EVERY`` sweeps (never after the last: the caller's
+    action materializes it)."""
+    for i in range(1, n_iter + 1):
+        state = step(state)
+        if i % _SWEEP_CKPT_EVERY == 0 and i != n_iter:
+            state = state.localCheckpoint(eager=True)
+    return state
 
 
 def pagerank(
@@ -57,16 +123,13 @@ def pagerank(
         # paid an extra edge-sized exchange for nothing
         e = e.union(e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d")))
     e = e.distinct().localCheckpoint(eager=True)  # every sweep re-reads this
-    # the broadcast/shuffle-hash decision for every node-sized side: the
-    # directed edge-row count bounds the node count (same argument as
-    # label_propagation; one ~10 ms count on the materialized RDD)
-    m_rows = e.count()
+    m_rows = e.count()  # bounds the node count (see _BCAST_MAX_ROWS)
     deg = e.groupBy("__s").agg(F.count(F.lit(1)).alias("__deg"))
     # degree is STATIC across sweeps: merge it into the edge list once
     # (and materialize) instead of paying a second edge-sized join per
     # sweep — measured 3.5x -> ~2x at the 10x probe; node-sized deg rides
     # a broadcast below the ceiling so the merge never shuffles e (r12)
-    e = e.join(_node_sized(deg, m_rows), "__s").localCheckpoint(eager=True)
+    e = e.join(_node_side(deg, m_rows), "__s").localCheckpoint(eager=True)
     # nodes is STATIC too: materialize it once (r12) — unpinned, every
     # sweep's rank rebuild re-ran this edge-sized distinct inside its
     # checkpoint job (5 extra edge-sized exchanges on the 5-sweep golden)
@@ -82,21 +145,17 @@ def pagerank(
             F.col("__s").alias("node"), F.lit(None).cast("double").alias("rank")
         )
     teleport = (1.0 - damping) / n
-    ranks = nodes.withColumn("__r", F.lit(1.0 / n))
-    for i in range(n_iter):
-        # node-sized sides ride broadcast joins below the ceiling and
-        # shuffle_hash hints above it (r12, same _node_sized policy as
-        # label_propagation — the r11 shuffle_hash-only shape still
-        # exchanged the FULL edge list on the join key every sweep; the
-        # broadcast path never shuffles it, and each sweep's only
-        # exchange ships node-sized partially-aggregated sums).
+
+    def step(ranks: DataFrame) -> DataFrame:
+        # each sweep's only exchange ships node-sized partially-aggregated
+        # sums; below the ceiling the edge list is never shuffled (r12)
         contrib = (
-            e.join(_node_sized(ranks, n), "__s")
+            e.join(_node_side(ranks, n), "__s")
             .groupBy("__d")
             .agg(F.sum(F.col("__r") / F.col("__deg")).alias("__c"))
         )
-        ranks = nodes.join(
-            _node_sized(contrib, n), nodes["__s"] == contrib["__d"], "left"
+        return nodes.join(
+            _node_side(contrib, n), nodes["__s"] == contrib["__d"], "left"
         ).select(
             nodes["__s"],
             (
@@ -104,25 +163,9 @@ def pagerank(
                 + F.lit(damping) * F.coalesce(F.col("__c"), F.lit(0.0))
             ).alias("__r"),
         )
-        # checkpoint cadence: every _SWEEP_CKPT_EVERY sweeps, not every
-        # sweep (r12, same rationale as label_propagation — the per-sweep
-        # eager materialization was a fixed-cost job whose overhead grows
-        # with core count while the node frame does not)
-        if (i + 1) % _SWEEP_CKPT_EVERY == 0 and i != n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = _sweep(nodes.withColumn("__r", F.lit(1.0 / n)), step, n_iter)
     return ranks.select(F.col("__s").alias("node"), F.col("__r").alias("rank"))
-
-
-# Broadcast ceiling for triangle counting's metadata frames (guide §3.1):
-# below this many CANONICAL EDGES both the degree frame (<= 2m rows of two
-# longs) and the packed out-adjacency frame (m longs total across all
-# arrays, by the degree orientation) are tens of MB serialized — inside
-# the guide's "a few hundred MB is usually fine" broadcast band — so every
-# join in the pipeline becomes a broadcast hash join and THE EDGE LIST IS
-# NEVER SHUFFLED. Above the ceiling the joins keep shuffle_hash hints
-# (per-partition node-sized builds always fit; safe for billion-edge
-# graphs where the adjacency frame is TB-sized and unbroadcastable).
-_TRI_BCAST_MAX_EDGES = 4_000_000
 
 
 def triangle_counts(
@@ -149,8 +192,9 @@ def triangle_counts(
     included. Shapes (r12): one key shuffle to canonicalize, one degree
     aggregate, one aggregate packing out-adjacency ARRAYS (each O(√m)
     long), then the orientation and the two adjacency attachments ride
-    BROADCAST joins below ``_TRI_BCAST_MAX_EDGES`` (shuffle_hash hints
-    above it — per-partition node-sized builds, billion-edge safe), and
+    BROADCAST joins below ``_BCAST_MAX_ROWS`` canonical edges, which bound
+    both metadata frames (shuffle_hash hints above it — per-partition
+    node-sized builds, billion-edge safe), and
     ONE explode emits every per-node contribution of an edge in a single
     pass: ``u`` and ``v`` each close ``|N⁺(u) ∩ N⁺(v)|`` triangles at
     this edge and every ``w`` in the intersection closes one. The r11
@@ -171,31 +215,20 @@ def triangle_counts(
     nothing (the blocks are re-fetched or the job fails) — accepted for
     the 188-scan re-expansion it prevents.
     """
-    e = (
-        edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # The broadcast decision needs only the canonical edge count, a ~10 ms
-    # job on the just-materialized RDD; m bounds both metadata frames
-    # (deg <= 2m rows, adjacency payload = m longs total).
+    e = _undirected(
+        edges, F.col(src).cast("long"), F.col(dst).cast("long")
+    ).localCheckpoint(eager=True)
+    # m bounds both metadata frames (deg <= 2m rows, adjacency payload =
+    # m longs total)
     m_edges = e.count()
-    small = m_edges <= _TRI_BCAST_MAX_EDGES
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = (
         und.groupBy("a").agg(F.count(F.lit(1)).alias("dg")).withColumnRenamed("a", "n")
         .localCheckpoint(eager=True)
     )
-
-    def _meta(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df.hint("shuffle_hash")
-
-    ed = (
-        e.join(_meta(deg.select(F.col("n").alias("a"), F.col("dg").alias("da"))), "a")
-        .join(_meta(deg.select(F.col("n").alias("b"), F.col("dg").alias("db"))), "b")
-    )
+    da = deg.select(F.col("n").alias("a"), F.col("dg").alias("da"))
+    db = deg.select(F.col("n").alias("b"), F.col("dg").alias("db"))
+    ed = e.join(_node_side(da, m_edges), "a").join(_node_side(db, m_edges), "b")
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
@@ -203,22 +236,18 @@ def triangle_counts(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
     )
-    if not small:
+    if m_edges > _BCAST_MAX_ROWS:
         # on the shuffle path the orientation feeds two shuffled joins
         # plus the adjacency aggregate — pin it so the upstream joins run
         # once (on the broadcast path it is a map-side recompute over the
         # checkpointed edge set and the broadcasts are plan-reused)
         orient = orient.localCheckpoint(eager=True)
     adj = orient.groupBy("u").agg(F.collect_list("v").alias("__nb"))
+    nu = adj.select(F.col("u").alias("__ju"), F.col("__nb").alias("__nu"))
+    nv = adj.select(F.col("u").alias("__jv"), F.col("__nb").alias("__nv"))
     closed = (
-        orient.join(
-            _meta(adj.select(F.col("u").alias("__ju"), F.col("__nb").alias("__nu"))),
-            F.col("u") == F.col("__ju"),
-        )
-        .join(
-            _meta(adj.select(F.col("u").alias("__jv"), F.col("__nb").alias("__nv"))),
-            F.col("v") == F.col("__jv"),
-        )
+        orient.join(_node_side(nu, m_edges), F.col("u") == F.col("__ju"))
+        .join(_node_side(nv, m_edges), F.col("v") == F.col("__jv"))
         .select("u", "v", F.array_intersect("__nu", "__nv").alias("__ws"))
         .where(F.size("__ws") > 0)
     )
@@ -249,44 +278,12 @@ def triangle_counts(
         .agg(F.sum("c").alias("t"))
     )
     return (
-        deg.join(_meta(per_node), "n", "left")
+        deg.join(_node_side(per_node, m_edges), "n", "left")
         .select(
             F.col("n").alias("node"),
             F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("triangles"),
         )
     )
-
-
-# Checkpoint cadence for iterative sweeps (r12 optimization, guide §2.4/§5):
-# checkpointING EVERY sweep was the r5-r11 shape, and profiling the 4-sweep
-# copurchase golden at 32 cores showed it is why LPA ANTI-scaled (9.8 s at
-# 32c vs 6.3 s at 8c on the r11 driver): each eager checkpoint is its own
-# job materializing a 20k-row frame across 2x-cores partitions, so the
-# per-sweep fixed cost GROWS with core count while the data does not.
-# Checkpointing every 4th sweep instead bounds plan depth (<= 4 joins
-# between materializations — the same flat-plan guarantee, amortized) and
-# lets Spark run consecutive sweeps inside one job.
-_SWEEP_CKPT_EVERY = 4
-
-# Node-frame broadcast ceiling for iterative sweep joins (guide §3.1): a
-# label/rank frame of n nodes is ~32 B/row serialized, so 4M nodes is a
-# ~128 MB broadcast — inside the guide's "a few hundred MB is usually
-# fine" band and far under the 8 GB hard cap. Below the ceiling the sweep
-# join broadcasts the node frame and THE EDGE LIST IS NEVER SHUFFLED
-# (the r11 shuffle_hash shape still exchanged the full edge list on the
-# join key every sweep — 4x the edge bytes for a 4-sweep run); above it,
-# billion-node graphs keep the r11 shuffle-hash path, whose per-partition
-# node-sized hash build always fits. The count that drives the decision
-# is one aggregate over the already-materialized node frame.
-_NODE_BCAST_MAX_ROWS = 4_000_000
-
-
-def _node_sized(df: DataFrame, n_rows: int) -> DataFrame:
-    """The sweep-join build side: broadcast when the node frame is small
-    enough (see ``_NODE_BCAST_MAX_ROWS``), shuffle-hash otherwise."""
-    if n_rows <= _NODE_BCAST_MAX_ROWS:
-        return F.broadcast(df)
-    return df.hint("shuffle_hash")
 
 
 def label_propagation(
@@ -309,7 +306,7 @@ def label_propagation(
     the k-core contract).
 
     Per sweep (r12 shape): one edge⋈label join — label frame broadcast
-    below ``_NODE_BCAST_MAX_ROWS`` so the edge list is NEVER shuffled,
+    below ``_BCAST_MAX_ROWS`` so the edge list is NEVER shuffled,
     shuffle-hash above it — and ONE hash aggregate,
     ``mode(lbl, deterministic=true)`` per node, which is exactly
     "most common label, ties to the smallest" (Spark's deterministic
@@ -319,42 +316,36 @@ def label_propagation(
     raw votes. Measured on the 4-sweep copurchase golden at sf0.1,
     32 cores: 9.7 s -> 5.8 s warm median, and the 32-core wall drops
     BELOW the 8-core wall (the r11 shape anti-scaled). Checkpoint
-    cadence: every ``_SWEEP_CKPT_EVERY`` sweeps (see note above).
+    cadence: :func:`_sweep`.
     """
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0: {n_iter}")
-    e = (
-        edges.select(F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d"))
-        .where(F.col("s") != F.col("d"))
-        .select(F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b"))
-        .distinct()
-    )
+    e = _undirected(edges, F.col(src).cast("long"), F.col(dst).cast("long"))
     e = e.select(F.col("a").alias("s"), F.col("b").alias("d")).union(
         e.select(F.col("b").alias("s"), F.col("a").alias("d"))
     )
     e = e.localCheckpoint(eager=True)
     labels = e.select(F.col("s").alias("node"), F.col("s").alias("lbl")).distinct()
-    # Sweep-join strategy decision at near-zero cost: counting the
-    # MATERIALIZED edge RDD is a ~10 ms job, and the directed edge-row
-    # count upper-bounds the node count (every labeled node owns >= 1
-    # edge row), so a small edge count proves the node frame broadcasts.
-    # Only when the bound is inconclusive (big graph, possibly few
-    # nodes) is the node frame materialized and counted exactly — there
-    # the extra small job is noise against the sweeps it tunes.
+    # The directed edge-row count bounds the node count (see
+    # _BCAST_MAX_ROWS). Only when that bound is inconclusive (big graph,
+    # possibly few nodes) is the node frame materialized and counted
+    # exactly — there the extra small job is noise against the sweeps it
+    # tunes.
     n_nodes = e.count()
-    if n_nodes > _NODE_BCAST_MAX_ROWS:
+    if n_nodes > _BCAST_MAX_ROWS:
         labels = labels.localCheckpoint(eager=True)
         n_nodes = labels.count()
-    for i in range(n_iter):
-        lab = _node_sized(labels, n_nodes)
-        labels = (
+
+    def step(labels: DataFrame) -> DataFrame:
+        lab = _node_side(labels, n_nodes)
+        return (
             e.join(lab, e["d"] == lab["node"])
             .groupBy("s")
             .agg(F.mode("lbl", True).alias("lbl"))
             .select(F.col("s").alias("node"), "lbl")
         )
-        if (i + 1) % _SWEEP_CKPT_EVERY == 0 and i != n_iter - 1:
-            labels = labels.localCheckpoint(eager=True)
+
+    labels = _sweep(labels, step, n_iter)
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -387,23 +378,16 @@ def k_core(
         raise ValueError(f"k must be >= 1: {k}")
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0: {n_iter}")
-    e = (
-        edges.select(F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d"))
-        .where(F.col("s") != F.col("d"))
-        .select(F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b"))
-        .distinct()
-    )
+    e = _undirected(edges, F.col(src).cast("long"), F.col(dst).cast("long"))
     e = e.select(F.col("a").alias("s"), F.col("b").alias("d")).union(
         e.select(F.col("b").alias("s"), F.col("a").alias("d"))
     )
     e = e.localCheckpoint(eager=True)
     # survivor lists only shrink across rounds, so one decision from the
-    # initial edge count (which bounds the node count — every node owns
-    # >= 1 directed row) holds for every round: broadcast below the
-    # ceiling, shuffle_hash above it (r12, same _node_sized policy as
-    # label_propagation; the r11 shuffle_hash-only shape exchanged the
-    # edge list TWICE per peel round for the two semi-joins — on the
-    # broadcast path the only per-round exchange is the degree count's)
+    # initial edge count holds for every round (r12; the r11
+    # shuffle_hash-only shape exchanged the edge list TWICE per peel round
+    # for the two semi-joins — on the broadcast path the only per-round
+    # exchange is the degree count's)
     n_bound = e.count()
     for _ in range(n_iter):
         keep = (
@@ -413,10 +397,8 @@ def k_core(
             .select("s")
         )
         e = (
-            e.join(_node_sized(keep, n_bound), "s", "semi")
-            .join(
-                _node_sized(keep.withColumnRenamed("s", "d"), n_bound), "d", "semi"
-            )
+            e.join(_node_side(keep, n_bound), "s", "semi")
+            .join(_node_side(keep.withColumnRenamed("s", "d"), n_bound), "d", "semi")
             .select("s", "d")
         )
         e = e.localCheckpoint(eager=True)
@@ -445,8 +427,9 @@ def modularity(
       edges over the smaller side's volume; NULL when the denominator
       is 0 — a community spanning the whole graph has no outside).
 
-    Edges are canonicalized exactly like :func:`label_propagation`
-    (self-loops dropped, direction and duplicates collapsed), so the
+    Edges are canonicalized by :func:`_undirected`, exactly like
+    :func:`label_propagation` (self-loops dropped, direction and
+    duplicates collapsed), so the
     metrics compose directly over its output. Nodes missing from
     ``communities`` are excluded from every term (their edges still
     count in m).
@@ -458,15 +441,9 @@ def modularity(
     rule). Labels are node-sized key joins; every aggregate is
     community- or node-keyed; m rides a broadcast 1-row cross join.
     """
-    und = (
-        edges.select(
-            F.col(src).cast("long").alias("a0"), F.col(dst).cast("long").alias("b0")
-        )
-        .where(F.col("a0") != F.col("b0"))
-        .select(F.least("a0", "b0").alias("a"), F.greatest("a0", "b0").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(
+        edges, F.col(src).cast("long"), F.col(dst).cast("long")
+    ).localCheckpoint(eager=True)
     lab = communities.select(
         F.col(node_col).cast("long").alias("__n"),
         F.col(community_col).cast("long").alias("__c"),
@@ -551,20 +528,13 @@ def adamic_adar_scores(
     wedge self-join on the center key, pair aggregate, one left-anti
     join against the canonical edge set.
     """
-    e = (
-        edges.select(F.col(edges.columns[0]).alias("a"), F.col(edges.columns[1]).alias("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        # four branches derive from the canonical edge set (und -> deg,
-        # both wedge join sides via inc, the left-anti join) — pin it so
-        # each branch doesn't re-plan the upstream scan + distinct
-        # (ADVICE r7; the clustering_coefficients/degree_assortativity
-        # convention)
-        .localCheckpoint(eager=True)
-    )
+    # four branches derive from the canonical edge set (und -> deg, both
+    # wedge join sides via inc, the left-anti join) — pin it so each
+    # branch doesn't re-plan the upstream scan + distinct (ADVICE r7; the
+    # clustering_coefficients/degree_assortativity convention)
+    e = _undirected(
+        edges, F.col(edges.columns[0]), F.col(edges.columns[1])
+    ).localCheckpoint(eager=True)
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = und.groupBy(F.col("a").alias("w")).agg(F.count(F.lit(1)).alias("deg"))
     if max_center_degree is not None:
@@ -629,16 +599,9 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     engines — and is NULL for degree-1 nodes (no possible wedge,
     fail-closed rather than 0-faked). Returns
     ``(node, degree, triangles, lcc)``."""
-    e = (
-        edges.select(
-            F.col(edges.columns[0]).cast("long").alias("a"),
-            F.col(edges.columns[1]).cast("long").alias("b"),
-        )
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected(
+        edges, F.col(edges.columns[0]).cast("long"), F.col(edges.columns[1]).cast("long")
+    ).localCheckpoint(eager=True)
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = und.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
@@ -683,15 +646,9 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     both join sides + the node count) and would otherwise re-plan the
     upstream scan per branch. Returns one row
     ``(n_nodes, n_edges, m_stubs, r)``."""
-    e = (
-        edges.select(
-            F.col(edges.columns[0]).alias("a"), F.col(edges.columns[1]).alias("b")
-        )
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected(
+        edges, F.col(edges.columns[0]), F.col(edges.columns[1])
+    ).localCheckpoint(eager=True)
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = (
         und.groupBy(F.col("a").alias("w"))

@@ -388,3 +388,33 @@ def test_clustering_coefficients_hand_values(spark):
     assert got[3]["lcc"] == pytest.approx(1.0, abs=1e-6)
     assert got[4]["lcc"] == pytest.approx(1 / 3, abs=1e-6)
     assert got[5]["lcc"] is None and got[5]["degree"] == 1
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["pagerank", "triangle_counts", "label_propagation", "k_core", "connected_components"],
+)
+def test_above_ceiling_path_matches_broadcast_path(spark, monkeypatch, op):
+    """With the broadcast ceiling at 0 every node-sized join side takes the
+    shuffle_hash path (LPA also its pin-labels + exact-count branch,
+    triangle counting its orientation pin); the rows must equal the
+    default broadcast path's (PageRank floats compared at 12 places)."""
+    import random
+
+    from mr_dice_spark.operators import components, graph
+
+    fn = getattr(components if op == "connected_components" else graph, op)
+    rng = random.Random(11)
+    edges = sorted({tuple(rng.sample(range(30), 2)) for _ in range(60)})
+    df = spark.createDataFrame(edges, "src long, dst long")
+
+    def rows():
+        return sorted(
+            tuple(round(v, 12) if isinstance(v, float) else v for v in r)
+            for r in fn(df, "src", "dst").collect()
+        )
+
+    default = rows()
+    monkeypatch.setattr(graph, "_BCAST_MAX_ROWS", 0)
+    assert rows() == default
+    assert len(default) > 0

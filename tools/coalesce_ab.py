@@ -8,7 +8,7 @@ global conf must stay on).
 Runs each named golden (default: the extended set) warm median-of-3
 through the noop sink with spark.sql.adaptive.coalescePartitions.enabled
 set from $COALESCE (default "true"). Run once per setting — fresh JVM
-per side, same as every bench_one A/B:
+per side, same as every `bench.py NAME...` A/B:
 
   COALESCE=true  python tools/coalesce_ab.py
   COALESCE=false python tools/coalesce_ab.py

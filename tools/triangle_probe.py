@@ -7,8 +7,9 @@ a skewed degree distribution rather than by argument.
 
 Graphs are deterministic (xxhash64-derived endpoints, no rand() — guide
 §2.5's retry-safety rule applies to probes too). The x10 case crosses
-``_TRI_BCAST_MAX_EDGES`` so it exercises the shuffle_hash fallback path,
-not just the broadcast path the golden uses.
+``graph._BCAST_MAX_ROWS`` (the one broadcast ceiling, applied by
+``graph._node_side``) so it exercises the shuffle_hash fallback path, not
+just the broadcast path the golden uses.
 
 Run: python tools/triangle_probe.py [m_base] [factors ...]
      (defaults: m_base=1_200_000, factors 1 10 30)
