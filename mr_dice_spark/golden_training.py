@@ -6344,7 +6344,7 @@ def lepage_value_weekend_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     event type — ONE chi-square(2) gate for 'did weekend move the
     value distribution's centre OR its spread', combining the Wilcoxon
     z (location) and the Ansari-Bradley z (scale) this family already
-    reports separately. Both score chains ride mann_whitney's single
+    reports separately. Both score chains ride one ``rank_cells``
     exchange; exact permutation moments; z's pinned at 9dp before the
     squares."""
     from mr_dice_spark.operators.evaluation import lepage_2s

@@ -1,36 +1,45 @@
 """Classic k-sample distribution tests over grouped metric columns:
 one-way ANOVA (with eta-squared), Brown-Forsythe and Bartlett variance
-homogeneity, the Jarque-Bera normality screen, Kendall's tau-b on
-contingency cells, the Cochran-Armitage trend test, Kruskal-Wallis H,
-Mood's median test, the Grubbs max-deviate outlier screen, and the
-Jonckheere-Terpstra ordered-alternative trend test.
+homogeneity, the Jarque-Bera normality screen, Kendall's tau-b and
+Somers' D on contingency cells, the Cochran-Armitage trend test,
+Kruskal-Wallis H with Dunn's post-hoc pairs, Mood's median test, the
+Grubbs max-deviate outlier screen, the Jonckheere-Terpstra
+ordered-alternative trend test and Conover's squared-ranks scale test.
 
 Beyond-reference operators (nearest analogue: nothing — SURVEY.md §2 has
 no hypothesis-test surface): the drift/experimentation families already
 answer "did the rate move" (two_proportion_z, srm_check) and "did the
 distribution move" (psi/ks/jsd); this module answers the pre-test and
 k-sample questions an analyst asks FIRST — do the groups differ at all
-(ANOVA/Kruskal/Mood), in the hypothesized ORDER (Cochran-Armitage,
+(ANOVA/Kruskal/Dunn/Mood), in the hypothesized ORDER (Cochran-Armitage,
 Jonckheere-Terpstra), is the equal-variance assumption tenable
-(Brown-Forsythe, Bartlett), is normality defensible (Jarque-Bera,
-Grubbs).
+(Brown-Forsythe, Bartlett, Conover), is normality defensible
+(Jarque-Bera, Grubbs).
 
-Cross-engine determinism: every statistic is closed-form arithmetic over
-per-group power sums (count, Σx, Σx², Σx³, Σx⁴) stated in the SAME
+Cross-engine determinism: the moment tests are closed-form arithmetic
+over per-group power sums (count, Σx, Σx², Σx³, Σx⁴) stated in the SAME
 expression shape on both engines; the only interim estimate that feeds
 back into row-level arithmetic (the Brown-Forsythe group median) is
 quantized (nudge-round 6) before use — the operators/robust.py rule.
+The rank tests keep doubled midranks as exact longs
+(:func:`~mr_dice_spark.operators.ranks.rank_cells` for Dunn).
 
-Scale shape: each operator is one hash aggregate on the group key then a
-single-row (or per-group) reduce; Brown-Forsythe adds one broadcast of
-the group-median dimension (one row per group) back onto the rows. No
-windows, no Python, no second scan of the corpus.
+Scale shape: the moment tests are one hash aggregate on the group key
+then a single-row (or per-group) reduce; Brown-Forsythe adds one
+broadcast of the group-median dimension (one row per group) back onto
+the rows. Windows appear only where a test needs ranks or per-group
+order: key-partitioned windows in ``grubbs_max_deviate``,
+``moods_median_test``, ``jonckheere_terpstra``, ``dunn_posthoc`` and
+``conover_squared_ranks``, and the range-partitioned ``prefix_sums``
+in ``kruskal_wallis_by_group``. No Python, no second scan of the corpus.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from mr_dice_spark.operators.ranks import rank_cells
 
 
 def _power_sums(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
@@ -1040,18 +1049,18 @@ def dunn_posthoc(
     :func:`~mr_dice_spark.operators.evaluation.benjamini_hochberg` —
     this operator reports the raw z per pair.
 
-    Cross-engine determinism: doubled midranks ``2r(v) = 2 c_lt(v) +
-    t_v + 1`` keep every rank SUM an exact integer (the kruskal
-    discipline); N, n_g and T are exact longs; each mean rank and the
+    Cross-engine determinism: doubled midranks from
+    :func:`~mr_dice_spark.operators.ranks.rank_cells` over the per-value
+    tie sizes keep every rank SUM an exact integer; N, n_g and T are exact longs; each mean rank and the
     variance are fixed IEEE chains on exact operands; sqrt pins at
     9dp, z pins at 9dp and rounds at 6. All-tied keys (T = N^3 - N,
     zero variance) fail-close z to NULL. Keys with < 2 groups emit NO
     pair rows — the output is the PAIR relation, not a per-key scalar
     (documented, unlike scalar stats' keep-the-key convention).
 
-    Scale shape: one (key, group, value) cell aggregate; per-value tie
-    sizes and their strict cumulative ride ONE HashPartitioning(key)
-    exchange; one cell-sized equi-join back on (key, value); a per-
+    Scale shape: one (key, group, value) cell aggregate; rank_cells'
+    per-value tie sizes and their strict cumulative ride ONE
+    HashPartitioning(key) exchange; one cell-sized equi-join back on (key, value); a per-
     (key, group) reduce to rank sums; then the PAIR self-join of the
     per-group frame — k^2-bounded rows per key (group counts, not row
     counts). No row-level join anywhere. Returns ``(key, g_a, g_b,
@@ -1070,18 +1079,7 @@ def dunn_posthoc(
     cells = base.groupBy("__k", "__g", "__v").agg(
         F.count(F.lit(1)).alias("__c")
     ).localCheckpoint(eager=True)
-    vt = cells.groupBy("__k", "__v").agg(F.sum("__c").alias("__t"))
-    w_strict = (
-        Window.partitionBy("__k")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    vr = vt.select(
-        "__k",
-        "__v",
-        "__t",
-        F.coalesce(F.sum("__t").over(w_strict), F.lit(0)).alias("__clt"),
-    )
+    vr = rank_cells(cells, ["__k"], "__v", t=F.sum("__c"))
     tie = vr.groupBy("__k").agg(
         F.sum(
             F.col("__t") * (F.col("__t") - 1) * (F.col("__t") + 1)
@@ -1092,9 +1090,7 @@ def dunn_posthoc(
         .groupBy("__k", "__g")
         .agg(
             F.sum("__c").alias("__ng"),
-            F.sum(
-                F.col("__c") * (2 * F.col("__clt") + F.col("__t") + 1)
-            ).alias("__r2"),  # 2*R_g, exact long
+            F.sum(F.col("__c") * F.col("__r2")).alias("__r2"),  # 2*R_g
         )
     )
     tot = gr.groupBy("__k").agg(F.sum("__ng").alias("__nn"))

@@ -5,8 +5,8 @@ Beyond-reference operators (nearest analogue: nothing — SURVEY.md §2 has
 no evaluation surface): a training-data pipeline that scores documents
 (quality classifiers, language ID, toxicity filters) needs to EVALUATE
 those scorers against labels at corpus scale, and none of these
-statistics exist as Spark builtins. All three are single-pass relational
-shapes with no Python anywhere:
+statistics exist as Spark builtins. Every operator is a relational plan
+with no Python UDF; three representative shapes:
 
 * ``auc_by_group`` — ROC-AUC as the Mann-Whitney rank-sum statistic with
   exact average-rank tie handling: one exchange per group key (the two
@@ -23,19 +23,31 @@ exchange); a single GLOBAL AUC over 10^11 rows would single-partition the
 rank window — callers group by shard/day/lang and combine, which is also
 the statistically honest shape (per-slice AUC, not one pooled curve).
 
-Laziness contract: every operator here returns an unexecuted plan EXCEPT
-``fleiss_kappa``, ``kendalls_w``, ``friedman_test``, and ``icc_two_way``,
-which run a 1-row panel-shape probe (plus a localCheckpoint pin) eagerly
-at construction — their statistics are undefined on ragged panels, and
-deferring the validation would mean silently computing a wrong number.
-All four fail closed with a 1-row NULL frame on EMPTY input; only a
-genuinely malformed panel raises.
+Laziness contract: every operator here returns an unexecuted plan
+EXCEPT these, which run Spark jobs at construction:
+
+* ``fleiss_kappa``, ``kendalls_w``, ``friedman_test``, ``icc_two_way``,
+  ``quade_test`` and ``page_trend_test`` pin the panel
+  (``localCheckpoint``) and run a 1-row panel-shape probe
+  (``.first()``) — their statistics are undefined on ragged panels, and
+  deferring the validation would mean silently computing a wrong
+  number. All six fail closed with a 1-row NULL frame on EMPTY input;
+  only a genuinely malformed panel raises.
+* ``srm_check`` collects a 1-row unknown-arm probe and raises on a hit.
+* ``bradley_terry``, ``bcubed_scores``, ``adjusted_rand_index``,
+  ``logrank_test``, ``randomization_test``, ``cronbach_alpha``,
+  ``hodges_lehmann_shift``, ``krippendorff_alpha_nominal``,
+  ``brier_decomposition``, ``benjamini_hochberg``, ``cochran_q`` and
+  ``stuart_maxwell_3`` pin a frame several branches derive from (or an
+  iteration state) with ``localCheckpoint(eager=True)``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from mr_dice_spark.operators.ranks import rank_cells
 
 
 def auc_by_group(
@@ -1590,6 +1602,39 @@ def mcnemar_test(
     )
 
 
+def _two_sample_cells(
+    df: DataFrame,
+    group_col: str,
+    class_col: str,
+    value_col: str,
+    class_a,
+    below: dict | None = None,
+) -> DataFrame:
+    """(group, value) tie cells of a two-sample rank test: NULL
+    group/class/value rows excluded, then
+    :func:`~mr_dice_spark.operators.ranks.rank_cells` on ``__v`` within
+    ``__g`` with ``__ta`` (class-A members per cell), plus the group
+    totals ``__nn``/``__na`` on one unordered group window."""
+    base = df.where(
+        F.col(group_col).isNotNull()
+        & F.col(class_col).isNotNull()
+        & F.col(value_col).isNotNull()
+    ).select(
+        F.col(group_col).alias("__g"),
+        (F.col(class_col) == F.lit(class_a)).alias("__a"),
+        F.col(value_col).cast("double").alias("__v"),
+    )
+    cells = rank_cells(
+        base, ["__g"], "__v", below=below, __ta=F.count_if(F.col("__a"))
+    )
+    w_all = Window.partitionBy("__g")
+    return cells.select(
+        "*",
+        F.sum("__t").over(w_all).alias("__nn"),
+        F.sum("__ta").over(w_all).alias("__na"),
+    )
+
+
 def mann_whitney_u_by_group(
     df: DataFrame,
     group_col: str,
@@ -1603,48 +1648,26 @@ def mann_whitney_u_by_group(
     Welch's t (already in this module) assumes too much: does class A's
     value distribution stochastically dominate class B's?
 
-    Math kept half-integer-exact until the final division (the
-    auc_by_group discipline): per (group, value) tie-group of size t
-    with ta class-A members, the average rank is
-    ``c_lt + (t+1)/2`` (c_lt = rows strictly below), so
-    ``R_a = sum(ta * avgrank)``, ``U_a = R_a - na(na+1)/2``,
+    Math kept half-integer-exact until the final division: per (group,
+    value) tie cell of size t with ta class-A members, the doubled
+    midrank ``2r`` comes from
+    :func:`~mr_dice_spark.operators.ranks.rank_cells`, so
+    ``2 R_a = sum(ta * 2r)``, ``U_a = R_a - na(na+1)/2``,
     ``mu = na*nb/2`` and the tie-corrected
     ``sigma^2 = na*nb/12 * ((N+1) - sum(t^3-t)/(N(N-1)))``;
     ``z = (U_a - mu -+ 0.5 continuity) / sigma``. Groups where either
     class is empty or sigma = 0 (all values tied) return NULL z — not
     testable, surfaced rather than faked.
 
-    Scale shape: one hash aggregate to (group, value) tie-groups, one
+    Scale shape: one hash aggregate to (group, value) tie cells, one
     group-partitioned cumulative window over them, one final aggregate
     — the same single exchange as auc_by_group.
     """
-    base = df.where(
-        F.col(group_col).isNotNull()
-        & F.col(class_col).isNotNull()
-        & F.col(value_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("__g"),
-        (F.col(class_col) == F.lit(class_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    ties = base.groupBy("__g", "__v").agg(
-        F.count(F.lit(1)).alias("__t"),
-        F.count_if(F.col("__a")).alias("__ta"),
-    )
-    w = (
-        Window.partitionBy("__g")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = ties.withColumn("__clt", F.coalesce(F.sum("__t").over(w), F.lit(0)))
-    # doubled rank arithmetic keeps everything integer: 2*avgrank =
-    # 2*c_lt + t + 1, so 2*R_a = sum(ta * (2*c_lt + t + 1))
-    agg = ranked.groupBy("__g").agg(
+    cells = _two_sample_cells(df, group_col, class_col, value_col, class_a)
+    agg = cells.groupBy("__g").agg(
         F.sum("__t").alias("__nn"),
         F.sum("__ta").alias("__na"),
-        F.sum(
-            F.col("__ta") * (2 * F.col("__clt") + F.col("__t") + 1)
-        ).alias("__2ra"),
+        F.sum(F.col("__ta") * F.col("__r2")).alias("__2ra"),
         F.sum(
             F.col("__t") * F.col("__t") * F.col("__t") - F.col("__t")
         ).alias("__tie3"),
@@ -2946,14 +2969,15 @@ def kendalls_w(
     or when every rater's scores are fully tied (the correction
     zeroes the denominator — nothing is ranked; fail-closed).
 
-    Cross-engine determinism: midranks come from tie-collapsed
-    (rater, score) cells via rater-partitioned cumulative windows —
-    exact integers-plus-halves; S and both correction terms are exact
-    integer-valued doubles, so W is one correctly-rounded division.
+    Cross-engine determinism: midranks are
+    :func:`~mr_dice_spark.operators.ranks.rank_cells` doubled midranks
+    over (rater, score) cells, halved — exact integers-plus-halves; S
+    and both correction terms are exact integer-valued doubles, so W is
+    one correctly-rounded division.
 
-    Scale shape: a (rater, item) max-aggregate, a (rater, score) cell
-    aggregate + rater-partitioned windows (bounded by each rater's
-    item count — the kruskal_wallis midrank discipline), one join back
+    Scale shape: a (rater, item) max-aggregate, rank_cells' (rater,
+    score) cell aggregate + rater-partitioned window (bounded by each
+    rater's item count), one join back
     on (rater, score), an item-keyed and a rater-keyed aggregate, and
     1-row reduces meeting by broadcast. Returns one row
     ``(m_raters, n_items, s_stat, tie_correction, w)``.
@@ -2987,28 +3011,10 @@ def kendalls_w(
             f"kendalls_w: ragged panel — {cells} (rater, item) cells for "
             f"{m} raters x {n} items; every rater must score every item"
         )
-    tie_cells = obs.groupBy("__j", "__s").agg(F.count(F.lit(1)).alias("__t"))
-    w_run = (
-        Window.partitionBy("__j")
-        .orderBy("__s")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = tie_cells.select(
-        "__j",
-        "__s",
-        # midrank of a tie run ending at cumulative count c with t
-        # members: c - t + (t + 1) / 2 — exact integer-or-half doubles
-        (
-            F.sum("__t").over(w_run).cast("double")
-            - F.col("__t")
-            + (F.col("__t") + 1).cast("double") / 2.0
-        ).alias("__r"),
-        ((F.col("__t") * F.col("__t") * F.col("__t")) - F.col("__t")).alias(
-            "__tt"
-        ),
-    )
+    ranked = rank_cells(obs, ["__j"], "__s")
     with_ranks = obs.join(
-        ranked.select("__j", "__s", "__r"), ["__j", "__s"]
+        ranked.select("__j", "__s", (F.col("__r2") / 2.0).alias("__r")),
+        ["__j", "__s"],
     )
     mean_r = float(m) * (float(n) + 1.0) / 2.0
     s1 = (
@@ -3020,7 +3026,8 @@ def kendalls_w(
             ).alias("__S")
         )
     )
-    t1 = ranked.agg(F.coalesce(F.sum("__tt"), F.lit(0)).cast("double").alias("__T"))
+    tt = F.col("__t") * F.col("__t") * F.col("__t") - F.col("__t")
+    t1 = ranked.agg(F.coalesce(F.sum(tt), F.lit(0)).cast("double").alias("__T"))
     # two 1-row reduces meet by broadcast; W stays a live plan (the
     # cochran_q convention) rather than a collected scalar
     joined = s1.crossJoin(F.broadcast(t1))
@@ -3165,13 +3172,15 @@ def friedman_test(
     note). Empty input returns the fail-closed 1-row NULL frame.
     chi2_r is NULL when k < 2 or all blocks fully tied (C = 0).
 
-    Cross-engine determinism: midranks from tie-collapsed (block,
-    value) cells via block-partitioned cumulative windows — exact
-    integers-plus-halves; S and T are exact integer-valued doubles;
-    chi2_r is one correctly-rounded chain, rounded at 6.
+    Cross-engine determinism: midranks are
+    :func:`~mr_dice_spark.operators.ranks.rank_cells` doubled midranks
+    over (block, value) cells, halved — exact integers-plus-halves; S
+    and T are exact integer-valued doubles; chi2_r is one
+    correctly-rounded chain, rounded at 6.
 
-    Scale shape: a (block, treatment) max-aggregate, a (block, value)
-    cell aggregate + block-partitioned windows (bounded by k), one
+    Scale shape: a (block, treatment) max-aggregate, rank_cells'
+    (block, value) cell aggregate + block-partitioned window (bounded
+    by k), one
     join back, a treatment-keyed and a 1-row aggregate meeting by
     broadcast. Returns ``(n_blocks, k_treatments, s_stat,
     tie_correction, chi2_r, df)``.
@@ -3209,24 +3218,11 @@ def friedman_test(
             f"cells for {n} blocks x {k} treatments; every block must "
             "hold every treatment"
         )
-    tie_cells = obs.groupBy("__b", "__s").agg(F.count(F.lit(1)).alias("__tn"))
-    w_run = (
-        Window.partitionBy("__b")
-        .orderBy("__s")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ranked = rank_cells(obs, ["__b"], "__s")
+    with_ranks = obs.join(
+        ranked.select("__b", "__s", (F.col("__r2") / 2.0).alias("__r")),
+        ["__b", "__s"],
     )
-    ranked = tie_cells.select(
-        "__b",
-        "__s",
-        (
-            F.sum("__tn").over(w_run).cast("double")
-            - F.col("__tn")
-            + (F.col("__tn") + 1).cast("double") / 2.0
-        ).alias("__r"),
-        ((F.col("__tn") * F.col("__tn") * F.col("__tn")) - F.col("__tn"))
-        .alias("__tt"),
-    )
-    with_ranks = obs.join(ranked.select("__b", "__s", "__r"), ["__b", "__s"])
     mean_r = float(n) * (float(k) + 1.0) / 2.0
     s1 = (
         with_ranks.groupBy("__t")
@@ -3237,9 +3233,8 @@ def friedman_test(
             ).alias("__S")
         )
     )
-    t1 = ranked.agg(
-        F.coalesce(F.sum("__tt"), F.lit(0)).cast("double").alias("__T")
-    )
+    tt = F.col("__t") * F.col("__t") * F.col("__t") - F.col("__t")
+    t1 = ranked.agg(F.coalesce(F.sum(tt), F.lit(0)).cast("double").alias("__T"))
     joined = s1.crossJoin(F.broadcast(t1))
     corr = F.lit(1.0) - F.col("__T") / F.lit(
         float(n) * k * (float(k) ** 2 - 1.0)
@@ -3628,68 +3623,46 @@ def mood_scale_test(
     report NULL z (fail-closed); T/E still report where defined. NULL
     group/class/value rows are excluded.
 
-    Cross-engine determinism: midranks stay half-integer exact via the
-    doubled form (2r = 2 c_lt + t + 1 — the mann_whitney discipline),
-    so 4 a_i = (2r - N - 1)^2 is an exact long and the quartic moment
-    sums ride exact DECIMAL(38,0) products (t * d^2 as long, times d^2
-    as decimal — documented headroom N < ~3e4 per group for the long
-    intermediate, far above any per-group series; the decimal sum is
-    order- and engine-invariant); T and E[T] emit RAW (identical IEEE
-    chains on exact operands are bit-equal, and at their ~N^3/4
-    magnitude ROUND(double) itself diverges cross-engine — see the
-    inline note); z pins at 9dp and rounds at 6.
+    Cross-engine determinism: the doubled midrank 2r comes from
+    :func:`~mr_dice_spark.operators.ranks.rank_cells`, so 4 a_i =
+    (2r - N - 1)^2 is an exact long and the quartic moment sums ride
+    exact DECIMAL(38,0) products (t * d^2 as long, times d^2 as decimal
+    — the decimal sum is order- and engine-invariant); T and E[T] emit
+    RAW (identical IEEE chains on exact operands are bit-equal, and at
+    their ~N^3/4 magnitude ROUND(double) itself diverges cross-engine —
+    see the inline note); z pins at 9dp and rounds at 6.
 
-    Scale shape: mann_whitney's exact single exchange — one (group,
-    value) tie-cell aggregate, one group-partitioned cumulative
-    window, one closing aggregate. Returns ``(group, n_a, n_b,
-    t_stat, e_t, z)``.
+    Scale shape: :func:`_two_sample_cells` (one exchange), one closing
+    aggregate. Returns ``(group, n_a, n_b, t_stat, e_t, z)``.
     """
-    base = df.where(
-        F.col(group_col).isNotNull()
-        & F.col(class_col).isNotNull()
-        & F.col(value_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("__g"),
-        (F.col(class_col) == F.lit(class_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    cells = base.groupBy("__g", "__v").agg(
-        F.count(F.lit(1)).alias("__t"),
-        F.count_if(F.col("__a")).alias("__ta"),
-    )
-    w = (
-        Window.partitionBy("__g")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.partitionBy("__g")
-    staged = cells.select(
-        "__g",
-        "__t",
-        "__ta",
-        F.coalesce(F.sum("__t").over(w), F.lit(0)).alias("__clt"),
-        F.sum("__t").over(w_all).alias("__nn"),
-        F.sum("__ta").over(w_all).alias("__na"),
-    )
-    # doubled midrank and centred deviation, both exact longs
-    r2 = 2 * F.col("__clt") + F.col("__t") + 1
-    d = r2 - F.col("__nn") - 1
-    d2 = d * d  # 4 * a_i, exact long
-    td2 = F.col("__t") * d2  # headroom: N * (2N)^2 must fit a long
-    agg = staged.groupBy("__g").agg(
+    cells = _two_sample_cells(df, group_col, class_col, value_col, class_a)
+    d = F.col("__r2") - F.col("__nn") - 1  # 2 * (r_i - (N+1)/2)
+    return _linear_rank_scale_test(cells, group_col, d * d, 4)
+
+
+def _linear_rank_scale_test(
+    cells: DataFrame, group_col: str, score, k: int
+) -> DataFrame:
+    """Closing chain shared by :func:`mood_scale_test` (k = 4) and
+    :func:`ansari_bradley` (k = 2): exact permutation moments of
+    ``T = sum_{i in A} a_i`` from ``score = k * a_i``, an exact long per
+    :func:`_two_sample_cells` cell. Returns ``(group, n_a, n_b,
+    t_stat, e_t, z)``."""
+    ts = F.col("__t") * score  # headroom: N * max(score) must fit a long
+    agg = cells.groupBy("__g").agg(
         F.max("__na").alias("__cna"),
         F.max("__nn").alias("__cnn"),
-        F.sum(F.col("__ta") * d2).alias("__t4"),
-        F.sum(td2).alias("__s4"),
+        F.sum(F.col("__ta") * score).alias("__tk"),
+        F.sum(ts).alias("__sk"),
         F.sum(
-            td2.cast("decimal(19,0)") * d2.cast("decimal(19,0)")
-        ).alias("__s8"),
+            ts.cast("decimal(19,0)") * score.cast("decimal(19,0)")
+        ).alias("__skk"),
     )
     na = F.col("__cna").cast("double")
     nn = F.col("__cnn").cast("double")
     nb = nn - na
-    t_stat = F.col("__t4").cast("double") / 4.0
-    abar = F.col("__s4").cast("double") / 4.0 / nn
+    t_stat = F.col("__tk").cast("double") / float(k)
+    abar = F.col("__sk").cast("double") / float(k) / nn
     # e_t is RAW, not pinned/rounded: the quadratic scores push T and
     # E[T] to ~N^3/4 (1.7e11 at sf0.1), where ROUND(double, d) itself
     # DIVERGES cross-engine — DuckDB computes x*10^d -> nearbyint ->
@@ -3698,11 +3671,13 @@ def mood_scale_test(
     # sweep as a t_stat last-ulp mismatch). Both engines execute the
     # IDENTICAL IEEE chain on exact sub-2^53 operands, so the raw
     # doubles are bit-identical; rounding is what broke equality.
-    # Documented headroom: s8 < 2^53 needs N <~ 2e5 per group.
+    # Documented headroom: mood's quartic moment sum < 2^53 needs
+    # N <~ 2e5 per group (ansari's quadratic one has more room).
     e_t = na * abar
-    ssa = F.col("__s8").cast("double") / 16.0 - nn * abar * abar
+    ssa = F.col("__skk").cast("double") / float(k * k) - nn * abar * abar
+    # try_divide: a 1-row group (N - 1 = 0) fails closed, not ANSI-raises
     var = F.round(
-        na * nb / (nn * (nn - 1.0)) * ssa + F.lit(1e-12), 9
+        F.try_divide(na * nb, nn * (nn - 1.0)) * ssa + F.lit(1e-12), 9
     )
     ok = (F.col("__cna") > 0) & (nb > 0) & (var > 0)
     z = F.when(
@@ -3756,96 +3731,22 @@ def ansari_bradley(
     report NULL z (fail-closed); T/E still report where defined. NULL
     group/class/value rows are excluded.
 
-    Cross-engine determinism: midranks stay half-integer exact via the
-    doubled form (2r = 2 c_lt + t + 1 — the mann_whitney discipline),
-    so 2 a_i = min(2r, 2N + 2 - 2r) is an exact long; score sums ride
-    exact longs and the quadratic moment sum rides exact DECIMAL
-    products (t * 2a as long, times 2a as decimal — the mood_scale
-    headroom contract); the closing chain is fixed IEEE on identical
-    operands, pinned at 9dp, rounded at 6.
+    Cross-engine determinism: the doubled midrank 2r comes from
+    :func:`~mr_dice_spark.operators.ranks.rank_cells`, so 2 a_i =
+    min(2r, 2N + 2 - 2r) is an exact long; the closing chain is
+    mood_scale_test's (:func:`_linear_rank_scale_test`) with k = 2.
 
-    Scale shape: mann_whitney's exact single exchange — one (group,
-    value) tie-cell aggregate, one group-partitioned cumulative
-    window, one closing aggregate. Returns ``(group, n_a, n_b,
-    t_stat, e_t, z)``.
+    Scale shape: :func:`_two_sample_cells` (one exchange), one closing
+    aggregate. Returns ``(group, n_a, n_b, t_stat, e_t, z)``.
 
     Reference parity note: beyond-reference statistics extension (the
     reference engine at NingWang-art/Mr-Dice has no hypothesis-test
     surface).
     """
-    base = df.where(
-        F.col(group_col).isNotNull()
-        & F.col(class_col).isNotNull()
-        & F.col(value_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("__g"),
-        (F.col(class_col) == F.lit(class_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    cells = base.groupBy("__g", "__v").agg(
-        F.count(F.lit(1)).alias("__t"),
-        F.count_if(F.col("__a")).alias("__ta"),
-    )
-    w = (
-        Window.partitionBy("__g")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.partitionBy("__g")
-    staged = cells.select(
-        "__g",
-        "__t",
-        "__ta",
-        F.coalesce(F.sum("__t").over(w), F.lit(0)).alias("__clt"),
-        F.sum("__t").over(w_all).alias("__nn"),
-        F.sum("__ta").over(w_all).alias("__na"),
-    )
-    # doubled midrank and doubled triangular score, both exact longs
-    r2 = 2 * F.col("__clt") + F.col("__t") + 1
-    a2 = F.least(r2, 2 * F.col("__nn") + 2 - r2)  # 2 * a_i
-    ta2 = F.col("__t") * a2  # headroom: N * (N+1) must fit a long
-    agg = staged.groupBy("__g").agg(
-        F.max("__na").alias("__cna"),
-        F.max("__nn").alias("__cnn"),
-        F.sum(F.col("__ta") * a2).alias("__t2"),
-        F.sum(ta2).alias("__s2"),
-        F.sum(
-            ta2.cast("decimal(19,0)") * a2.cast("decimal(19,0)")
-        ).alias("__s4"),
-    )
-    na = F.col("__cna").cast("double")
-    nn = F.col("__cnn").cast("double")
-    nb = nn - na
-    t_stat = F.col("__t2").cast("double") / 2.0
-    abar = F.col("__s2").cast("double") / 2.0 / nn
-    # e_t is RAW, not pinned/rounded (the mood_scale convention): at
-    # large-N score magnitudes ROUND(double) itself diverges
-    # cross-engine (DuckDB's x*10^d path is lossy past 2^53; Spark
-    # rounds exactly) — identical raw IEEE chains on exact operands
-    # are bit-equal.
-    e_t = na * abar
-    ssa = F.col("__s4").cast("double") / 4.0 - nn * abar * abar
-    var = F.round(
-        na * nb / (nn * (nn - 1.0)) * ssa + F.lit(1e-12), 9
-    )
-    ok = (F.col("__cna") > 0) & (nb > 0) & (var > 0)
-    z = F.when(
-        ok,
-        F.round(
-            (t_stat - e_t) / F.round(F.sqrt(var) + F.lit(1e-12), 9)
-            + F.lit(1e-12),
-            9,
-        ),
-    )
-    defined = (F.col("__cna") > 0) & (nb > 0)
-    return agg.select(
-        F.col("__g").alias(group_col),
-        F.col("__cna").cast("long").alias("n_a"),
-        (F.col("__cnn") - F.col("__cna")).cast("long").alias("n_b"),
-        F.when(defined, t_stat).alias("t_stat"),
-        F.when(defined, e_t).alias("e_t"),
-        F.round(z + F.lit(1e-9), 6).alias("z"),
-    )
+    cells = _two_sample_cells(df, group_col, class_col, value_col, class_a)
+    r2 = F.col("__r2")
+    a2 = F.least(r2, 2 * F.col("__nn") + 2 - r2)  # 2 * a_i, exact long
+    return _linear_rank_scale_test(cells, group_col, a2, 2)
 
 
 def wilcoxon_signed_rank(
@@ -3875,16 +3776,14 @@ def wilcoxon_signed_rank(
     variance report NULL z (fail-closed); counts still report.
 
     Cross-engine determinism: d lands exactly on the caller's value
-    grid (document <= 6dp); |d| tie cells keep midranks half-integer
-    exact via the doubled form (2r = 2 c_lt + t + 1); W+/E come from
-    exact long sums and Var from exact decimal quartic sums (the
-    mood_scale headroom contract); z is one fixed chain on pinned
-    operands, rounded at 6.
+    grid (document <= 6dp); the (key, |d|) tie cells take doubled
+    midranks from :func:`~mr_dice_spark.operators.ranks.rank_cells`;
+    W+/E come from exact long sums and Var from exact decimal quartic
+    sums; z is one fixed chain on pinned operands, rounded at 6.
 
-    Scale shape: mann_whitney's single exchange on the (key, |d|) tie
-    cells — one cell aggregate, one key-partitioned cumulative window,
-    one closing aggregate. Returns ``(key, n_pairs, n_eff, w_plus,
-    e_w, z)``.
+    Scale shape: rank_cells on the (key, |d|) cells (one exchange), one
+    closing aggregate. Returns ``(key, n_pairs, n_eff, w_plus, e_w,
+    z)``.
 
     Reference parity note: beyond-reference statistics extension (the
     reference engine at NingWang-art/Mr-Dice has no hypothesis-test
@@ -3904,27 +3803,14 @@ def wilcoxon_signed_rank(
         F.count(F.lit(1)).alias("__np"),
         F.count_if(F.col("__d") != 0).alias("__ne"),
     )
-    cells = (
-        base.where(F.col("__d") != 0)
-        .groupBy("__k", F.abs(F.col("__d")).alias("__a"))
-        .agg(
-            F.count(F.lit(1)).alias("__t"),
-            F.count_if(F.col("__d") > 0).alias("__tp"),
-        )
+    nonzero = base.where(F.col("__d") != 0).withColumn(
+        "__a", F.abs(F.col("__d"))
     )
-    w = (
-        Window.partitionBy("__k")
-        .orderBy("__a")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    cells = rank_cells(
+        nonzero, ["__k"], "__a", __tp=F.count_if(F.col("__d") > 0)
     )
-    staged = cells.select(
-        "__k",
-        "__t",
-        "__tp",
-        F.coalesce(F.sum("__t").over(w), F.lit(0)).alias("__clt"),
-    )
-    r2 = 2 * F.col("__clt") + F.col("__t") + 1  # doubled midrank of |d|
-    agg = staged.groupBy("__k").agg(
+    r2 = F.col("__r2")  # doubled midrank of |d|
+    agg = cells.groupBy("__k").agg(
         F.sum(F.col("__tp") * r2).alias("__wp2"),
         F.sum(F.col("__t") * r2).alias("__sr2"),
         F.sum(
@@ -4082,52 +3968,26 @@ def lepage_2s(
     that z AND L (fail-closed — half an omnibus is not an omnibus).
     NULL group/class/value rows are excluded.
 
-    Cross-engine determinism: both score families stay half-integer
-    exact via the doubled form (2r = 2 c_lt + t + 1; 2a_AB =
-    min(2r, 2N+2-2r) — the mann_whitney discipline); score sums are
-    exact longs, quadratic moment sums exact decimals (the mood_scale
-    headroom contract); each z pins at 9dp; L is one fixed chain on
-    pinned z's, rounded at 6.
+    Cross-engine determinism: both score families are exact longs off
+    the doubled midrank 2r from
+    :func:`~mr_dice_spark.operators.ranks.rank_cells` (2a_AB =
+    min(2r, 2N+2-2r)); score sums are exact longs, quadratic moment
+    sums exact decimals; each z pins at 9dp (e_t included — unlike
+    mood/ansari, whose e_t emits raw); L is one fixed chain on pinned
+    z's, rounded at 6.
 
-    Scale shape: mann_whitney's exact single exchange — one (group,
-    value) tie-cell aggregate, one group-partitioned cumulative
-    window, one closing aggregate computing BOTH axes. Returns
-    ``(group, n_a, n_b, z_w, z_ab, lepage_l)``.
+    Scale shape: :func:`_two_sample_cells` (one exchange), one closing
+    aggregate computing BOTH axes. Returns ``(group, n_a, n_b, z_w,
+    z_ab, lepage_l)``.
 
     Reference parity note: beyond-reference statistics extension (the
     reference engine at NingWang-art/Mr-Dice has no hypothesis-test
     surface).
     """
-    base = df.where(
-        F.col(group_col).isNotNull()
-        & F.col(class_col).isNotNull()
-        & F.col(value_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("__g"),
-        (F.col(class_col) == F.lit(class_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    cells = base.groupBy("__g", "__v").agg(
-        F.count(F.lit(1)).alias("__t"),
-        F.count_if(F.col("__a")).alias("__ta"),
-    )
-    w = (
-        Window.partitionBy("__g")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.partitionBy("__g")
-    staged = cells.select(
-        "__g",
-        "__t",
-        "__ta",
-        F.coalesce(F.sum("__t").over(w), F.lit(0)).alias("__clt"),
-        F.sum("__t").over(w_all).alias("__nn"),
-        F.sum("__ta").over(w_all).alias("__na"),
-    )
-    r2 = 2 * F.col("__clt") + F.col("__t") + 1  # doubled midrank
+    cells = _two_sample_cells(df, group_col, class_col, value_col, class_a)
+    r2 = F.col("__r2")
     s2 = F.least(r2, 2 * F.col("__nn") + 2 - r2)  # doubled AB score
-    agg = staged.groupBy("__g").agg(
+    agg = cells.groupBy("__g").agg(
         F.max("__na").alias("__cna"),
         F.max("__nn").alias("__cnn"),
         F.sum(F.col("__ta") * r2).alias("__tw2"),
@@ -4153,7 +4013,7 @@ def lepage_2s(
         e_t = F.round(na * abar + F.lit(1e-12), 9)
         ssa = sum4.cast("double") / 4.0 - nn * abar * abar
         var = F.round(
-            na * nb / (nn * (nn - 1.0)) * ssa + F.lit(1e-12), 9
+            F.try_divide(na * nb, nn * (nn - 1.0)) * ssa + F.lit(1e-12), 9
         )
         return F.when(
             (F.col("__cna") > 0) & (nb > 0) & (var > 0),
@@ -4202,78 +4062,54 @@ def brunner_munzel(
 
     Groups where either class is empty report all-NULL statistics;
     zero placement variance (n_a S_A^2 + n_b S_B^2 = 0, e.g. fully
-    separated or fully tied samples) reports p_hat but NULL w
-    (fail-closed — the statistic is infinite or undefined there).
+    separated or fully tied samples) or a one-row sample (S^2
+    undefined) reports p_hat but NULL w (fail-closed — the statistic is
+    infinite or undefined there).
     NULL group/class/value rows are excluded.
 
-    Cross-engine determinism: pooled AND within-sample midranks stay
-    half-integer exact via doubled forms on the same tie cells (2d =
+    Cross-engine determinism: pooled AND within-sample midranks are
+    doubled longs on the same
+    :func:`~mr_dice_spark.operators.ranks.rank_cells` cells (2d =
     2r - 2r_own is an exact long, constant within a cell for each
     sample); the placement-variance numerators ``n S2_sum - S1_sum^2``
     are formed in exact decimal (the durbin_watson cancellation
     convention); means/variances pin at 9dp; w is one fixed chain,
     rounded at 6.
 
-    Scale shape: mann_whitney's single exchange plus nothing — the
-    within-sample cumulative counts ride the SAME (group, value)
-    ordered window as the pooled ones. Returns
+    Scale shape: :func:`_two_sample_cells` plus nothing — the
+    within-sample cumulative counts are rank_cells ``below`` sums on
+    the SAME (group, value) ordered window as the pooled ones. Returns
     ``(group, n_a, n_b, p_hat, w)``.
 
     Reference parity note: beyond-reference statistics extension (the
     reference engine at NingWang-art/Mr-Dice has no hypothesis-test
     surface).
     """
-    base = df.where(
-        F.col(group_col).isNotNull()
-        & F.col(class_col).isNotNull()
-        & F.col(value_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("__g"),
-        (F.col(class_col) == F.lit(class_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    cells = base.groupBy("__g", "__v").agg(
-        F.count(F.lit(1)).alias("__t"),
-        F.count_if(F.col("__a")).alias("__ta"),
-    )
-    w = (
-        Window.partitionBy("__g")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.partitionBy("__g")
     tb = F.col("__t") - F.col("__ta")
-    staged = cells.select(
-        "__g",
-        "__t",
-        "__ta",
-        tb.alias("__tb"),
-        F.coalesce(F.sum("__t").over(w), F.lit(0)).alias("__clt"),
-        F.coalesce(F.sum("__ta").over(w), F.lit(0)).alias("__clta"),
-        F.coalesce(F.sum(tb).over(w), F.lit(0)).alias("__cltb"),
-        F.sum("__t").over(w_all).alias("__nn"),
-        F.sum("__ta").over(w_all).alias("__na"),
+    cells = _two_sample_cells(
+        df, group_col, class_col, value_col, class_a,
+        below={"__clta": F.col("__ta"), "__cltb": tb},
     )
     # doubled pooled and within-sample midranks (exact longs); the
     # doubled placement 2d = 2r - 2r_own is cell-constant per sample
-    r2 = 2 * F.col("__clt") + F.col("__t") + 1
+    r2 = F.col("__r2")
     ra2 = 2 * F.col("__clta") + F.col("__ta") + 1
-    rb2 = 2 * F.col("__cltb") + F.col("__tb") + 1
+    rb2 = 2 * F.col("__cltb") + tb + 1
     da2 = r2 - ra2
     db2 = r2 - rb2
-    agg = staged.groupBy("__g").agg(
+    agg = cells.groupBy("__g").agg(
         F.max("__na").alias("__cna"),
         F.max("__nn").alias("__cnn"),
         F.sum(F.col("__ta") * r2).alias("__ra_sum2"),
-        F.sum(F.col("__tb") * r2).alias("__rb_sum2"),
+        F.sum(tb * r2).alias("__rb_sum2"),
         F.sum(F.col("__ta") * da2).alias("__da1"),
         F.sum(
             (F.col("__ta") * da2).cast("decimal(19,0)")
             * da2.cast("decimal(19,0)")
         ).alias("__da2"),
-        F.sum(F.col("__tb") * db2).alias("__db1"),
+        F.sum(tb * db2).alias("__db1"),
         F.sum(
-            (F.col("__tb") * db2).cast("decimal(19,0)")
+            (tb * db2).cast("decimal(19,0)")
             * db2.cast("decimal(19,0)")
         ).alias("__db2"),
     )
@@ -4289,7 +4125,8 @@ def brunner_munzel(
 
     def _s2(n_s, d1, d2):
         # sample variance of d/2 over sample s via decimal cancellation:
-        # (n*sum(d2^2) - sum(d2)^2) / (4 n (n-1))
+        # (n*sum(d2^2) - sum(d2)^2) / (4 n (n-1)); NULL for a 1-row
+        # sample (try_divide — undefined, so w fails closed)
         num = (
             (n_s.cast("decimal(7,0)") * d2).cast("decimal(38,0)")
             - (d1.cast("decimal(19,0)") * d1.cast("decimal(19,0)")).cast(
@@ -4298,7 +4135,7 @@ def brunner_munzel(
         ).cast("double")
         n_d = n_s.cast("double")
         return F.round(
-            num / (4.0 * n_d * (n_d - 1.0)) + F.lit(1e-12), 9
+            F.try_divide(num, 4.0 * n_d * (n_d - 1.0)) + F.lit(1e-12), 9
         )
 
     s2a = _s2(F.col("__cna"), F.col("__da1"), F.col("__da2"))
@@ -4356,8 +4193,8 @@ def quade_test(
     Friedman's C = 0).
 
     Cross-engine determinism: within-block midranks AND cross-block
-    range ranks stay half-integer exact via doubled forms (2r, 2Q from
-    tie-collapsed cells — the mann_whitney discipline), so 4 S_ij =
+    range ranks are doubled longs (2r, 2Q from
+    :func:`~mr_dice_spark.operators.ranks.rank_cells`), so 4 S_ij =
     2Q_i * (2 r_ij - k - 1) is an exact long; block ranges are exact
     differences of 6dp-grid values; A sums exact longs and B squares
     the per-treatment 4 S_j sums as exact decimals (headroom: |4 S_j|
@@ -4365,12 +4202,12 @@ def quade_test(
     F is one fixed IEEE chain on A/16 and B/(16n), pinned at 9dp,
     rounded at 6.
 
-    Scale shape: a (block, treatment) max-aggregate, a (block, value)
-    cell aggregate + block-partitioned windows (bounded by k), a
-    block-range dimension ranked on a single-partition window of the
-    BLOCK-COUNT-sized frame (one row per block — the friedman 1-row
-    meeting-point discipline), one broadcast join back, a
-    treatment-keyed and a 1-row aggregate. Returns ``(n_blocks,
+    Scale shape: a (block, treatment) max-aggregate, rank_cells'
+    (block, value) cell aggregate + block-partitioned window (bounded
+    by k), a block-range dimension ranked by rank_cells with no keys
+    (a single-partition window of the BLOCK-COUNT-sized frame, one row
+    per block — the friedman 1-row meeting-point discipline), one
+    broadcast join back, a treatment-keyed and a 1-row aggregate. Returns ``(n_blocks,
     k_treatments, a_stat, b_stat, f_stat, df1, df2)``.
 
     Reference parity note: beyond-reference statistics extension (the
@@ -4411,18 +4248,7 @@ def quade_test(
             f"cells for {n} blocks x {k} treatments; every block must "
             "hold every treatment"
         )
-    # within-block doubled midranks from tie cells (2r = 2 c_lt + t + 1)
-    tie_cells = obs.groupBy("__b", "__s").agg(F.count(F.lit(1)).alias("__tn"))
-    w_run = (
-        Window.partitionBy("__b")
-        .orderBy("__s")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = tie_cells.select(
-        "__b",
-        "__s",
-        (2 * F.sum("__tn").over(w_run) - F.col("__tn") + 1).alias("__r2"),
-    )
+    ranked = rank_cells(obs, ["__b"], "__s").select("__b", "__s", "__r2")
     with_ranks = obs.join(ranked, ["__b", "__s"])
     # block ranges (exact on the 6dp grid), doubled midranks across
     # blocks via tie cells on the range value — one row per block, so
@@ -4430,13 +4256,8 @@ def quade_test(
     ranges = obs.groupBy("__b").agg(
         (F.max("__s") - F.min("__s")).alias("__rng")
     )
-    rng_cells = ranges.groupBy("__rng").agg(F.count(F.lit(1)).alias("__tn"))
-    w_rng = Window.orderBy("__rng").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    rng_ranked = rng_cells.select(
-        "__rng",
-        (2 * F.sum("__tn").over(w_rng) - F.col("__tn") + 1).alias("__q2"),
+    rng_ranked = rank_cells(ranges, [], "__rng").select(
+        "__rng", F.col("__r2").alias("__q2")
     )
     block_q = ranges.join(F.broadcast(rng_ranked), ["__rng"]).select(
         "__b", "__q2"
@@ -4515,14 +4336,15 @@ def page_trend_test(
     probe runs eagerly, empty input returns the 1-row NULL frame. z is
     NULL when k < 2 or every block is fully tied (Var 0).
 
-    Cross-engine determinism: midranks are integers-plus-halves from
-    tie-collapsed cells (dyadic — exact in doubles); L, E and Var are
+    Cross-engine determinism: midranks are halved
+    :func:`~mr_dice_spark.operators.ranks.rank_cells` doubled midranks
+    (dyadic — exact in doubles); L, E and Var are
     exact dyadic arithmetic; z is one fixed IEEE chain, pinned at 9dp,
     rounded at 6.
 
-    Scale shape: friedman_test's exact shape — the pinned panel, a
-    (block, value) cell aggregate with block-partitioned windows
-    (bounded by k), one join back, a broadcast treatment-ordinal
+    Scale shape: friedman_test's exact shape — the pinned panel,
+    rank_cells' (block, value) cell aggregate and block-partitioned
+    window (bounded by k), one join back, a broadcast treatment-ordinal
     dimension (k rows), two closing reduces. Returns ``(n_blocks,
     k_treatments, l_stat, e_l, var_l, z)``.
     """
@@ -4559,20 +4381,8 @@ def page_trend_test(
             f"cells for {n} blocks x {k} treatments; every block must "
             "hold every treatment"
         )
-    tie_cells = obs.groupBy("__b", "__s").agg(F.count(F.lit(1)).alias("__tn"))
-    w_run = (
-        Window.partitionBy("__b")
-        .orderBy("__s")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = tie_cells.select(
-        "__b",
-        "__s",
-        (
-            F.sum("__tn").over(w_run).cast("double")
-            - F.col("__tn")
-            + (F.col("__tn") + 1).cast("double") / 2.0
-        ).alias("__r"),
+    ranked = rank_cells(obs, ["__b"], "__s").select(
+        "__b", "__s", (F.col("__r2") / 2.0).alias("__r")
     )
     with_ranks = obs.join(ranked, ["__b", "__s"])
     w_ord = Window.orderBy("__t")

@@ -35,6 +35,19 @@ SENSITIVE = [
     "lsh_single_linkage_clusters",  # banding join -> verify -> fixpoint
     "ccnet_perplexity_buckets",     # NTILE at quantized-score ties
     "bpe_train_merges_corpus",      # iterative argmax feeds literal folds
+    # rank_cells consumers: one window over unique (key, value) tie
+    # cells, rank sums as exact longs — no row order can leak in
+    "mann_whitney_purchase_by_weekday",
+    "mood_scale_value_weekend_by_type",
+    "ansari_value_weekend_by_type",
+    "wilcoxon_signed_even_odd_by_type",
+    "lepage_value_weekend_by_type",
+    "brunner_munzel_value_weekend_by_type",
+    "kendalls_w_bucket_rank_by_type",
+    "friedman_weekday_value_by_type",
+    "quade_weekday_value_by_type",
+    "page_trend_weekly_by_weekday",
+    "dunn_posthoc_value_by_weekday",
 ]
 
 

@@ -1,13 +1,15 @@
-"""Hypothesis property tests for the round-11 rank statistics: every
+"""Hypothesis property tests for the rank statistics: every
 rank-based statistic must be INVARIANT under the transform class its
 theory promises (strictly monotone for pure-rank tests, affine for
-deviation-then-rank, label permutation for categorical tables).
+deviation-then-rank, label permutation for categorical tables), and the
+shared ``rank_cells`` primitive must agree with a pure-Python midrank.
 
 These run each example through Spark, so example counts stay small —
 the properties are exact-equality checks on exact-integer outputs, so
 a single violating example would fail deterministically.
 """
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -145,3 +147,144 @@ def test_stuart_maxwell_label_permutation_invariant(spark, xs):
     assert got["a"]["chi2"] == got["b"]["chi2"]
     assert got["a"]["k_categories"] == got["b"]["k_categories"]
     assert got["a"]["dof"] == got["b"]["dof"]
+
+
+def _doubled_midranks(vals):
+    """Pure-Python doubled midrank of each distinct value: twice the
+    mean 1-based position of its copies in the sorted multiset."""
+    s = sorted(vals)
+    return {
+        v: 2 * sum(i + 1 for i, x in enumerate(s) if x == v) // s.count(v)
+        for v in set(s)
+    }
+
+
+_cells = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=1),
+        st.integers(min_value=0, max_value=1),
+        st.integers(min_value=0, max_value=5),
+    ),
+    min_size=1,
+    max_size=24,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(xs=_cells)
+def test_rank_cells_two_keys_match_python_midranks(spark, xs):
+    from pyspark.sql import functions as F
+
+    from mr_dice_spark.operators.ranks import rank_cells
+
+    df = spark.createDataFrame(
+        [(a, b, float(v)) for a, b, v in xs], "a int, b int, v double"
+    )
+    got = {
+        (r["a"], r["b"], r["v"]): (r["__t"], r["__hi"], r["__clt"], r["__r2"])
+        for r in rank_cells(
+            df, ["a", "b"], "v", __hi=F.count_if(F.col("v") > 2)
+        ).collect()
+    }
+    exp = {}
+    for key in {(a, b) for a, b, _ in xs}:
+        vals = [float(v) for a, b, v in xs if (a, b) == key]
+        for v, r2 in _doubled_midranks(vals).items():
+            t = vals.count(v)
+            clt = sum(1 for x in vals if x < v)
+            exp[key + (v,)] = (t, t if v > 2 else 0, clt, r2)
+    assert got == exp
+
+
+@settings(max_examples=8, deadline=None)
+@given(xs=_cells)
+def test_rank_cells_without_keys_ranks_globally(spark, xs):
+    from mr_dice_spark.operators.ranks import rank_cells
+
+    df = spark.createDataFrame([(float(v),) for _, _, v in xs], "v double")
+    got = {r["v"]: r["__r2"] for r in rank_cells(df, [], "v").collect()}
+    assert got == _doubled_midranks([float(v) for _, _, v in xs])
+
+
+@settings(max_examples=8, deadline=None)
+@given(xs=_cells)
+def test_rank_cells_weighted_t_and_below_sums(spark, xs):
+    """Pre-aggregated rows: ``t=F.sum(w)`` ranks the weight-expanded
+    multiset, and a ``below`` sum is the strict running count of a
+    per-cell aggregate — both on the ONE window."""
+    from pyspark.sql import functions as F
+
+    from mr_dice_spark.operators.ranks import rank_cells
+
+    rows = [("k", float(v), w + 1, a == 1) for a, w, v in xs]
+    df = spark.createDataFrame(rows, "k string, v double, w long, f boolean")
+    out = rank_cells(
+        df, ["k"], "v",
+        t=F.sum("w"),
+        below={"__cltf": F.col("__tf")},
+        __tf=F.sum(F.when(F.col("f"), F.col("w")).otherwise(0)),
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Window [") == 1
+    got = {r["v"]: (r["__t"], r["__r2"], r["__cltf"]) for r in out.collect()}
+    expanded = [v for _, v, w, _ in rows for _ in range(w)]
+    flagged = [v for _, v, w, f in rows if f for _ in range(w)]
+    exp = {
+        v: (expanded.count(v), r2, sum(1 for x in flagged if x < v))
+        for v, r2 in _doubled_midranks(expanded).items()
+    }
+    assert got == exp
+
+
+_TWO_SAMPLE = {
+    "mann_whitney_u_by_group": ["n_a", "n_b", "u_a", "mu", "sigma", "z"],
+    "mood_scale_test": ["n_a", "n_b", "t_stat", "e_t", "z"],
+    "ansari_bradley": ["n_a", "n_b", "t_stat", "e_t", "z"],
+    "lepage_2s": ["n_a", "n_b", "z_w", "z_ab", "lepage_l"],
+    "brunner_munzel": ["n_a", "n_b", "p_hat", "w"],
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TWO_SAMPLE))
+@settings(max_examples=5, deadline=None)
+@given(
+    xs=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=1),
+            st.integers(min_value=0, max_value=6),
+        ),
+        min_size=4,
+        max_size=16,
+    )
+)
+def test_two_sample_monotone_invariant(spark, name, xs):
+    """The two-sample rank tests see values only through their tie-cell
+    ranks, so the strictly increasing v -> (2v+1)^3 changes nothing."""
+    from mr_dice_spark.operators import evaluation
+
+    rows = [("a", str(c), float(v)) for c, v in xs]
+    rows += [("b", str(c), float(2 * v + 1) ** 3) for c, v in xs]
+    df = spark.createDataFrame(rows, "g string, c string, v double")
+    fn = getattr(evaluation, name)
+    got = {r["g"]: r for r in fn(df, "g", "c", "v", "1").collect()}
+    cols = _TWO_SAMPLE[name]
+    assert [got["a"][c] for c in cols] == [got["b"][c] for c in cols]
+
+
+@pytest.mark.parametrize("name", sorted(_TWO_SAMPLE))
+def test_two_sample_degenerate_groups_fail_closed(spark, name):
+    """A one-row group, a one-class group and a one-row sample must
+    come back as rows with NULL z/w — never an ANSI divide-by-zero."""
+    from mr_dice_spark.operators import evaluation
+
+    rows = [("solo", "1", 1.0)]
+    rows += [("one_class", "0", float(v)) for v in (1, 2, 3)]
+    rows += [("singleton_a", "1", 5.0)]
+    rows += [("singleton_a", "0", float(v)) for v in (1, 2, 2, 7)]
+    df = spark.createDataFrame(rows, "g string, c string, v double")
+    fn = getattr(evaluation, name)
+    got = {r["g"]: r for r in fn(df, "g", "c", "v", "1").collect()}
+    assert set(got) == {"solo", "one_class", "singleton_a"}
+    last = _TWO_SAMPLE[name][-1]
+    assert got["solo"][last] is None and got["one_class"][last] is None
+    assert got["singleton_a"]["n_a"] == 1 and got["singleton_a"]["n_b"] == 4
