@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mr_dice_spark.operators.ranks import rank_cells
+from mr_dice_spark.operators.ranks import rank_cells, two_sample_cells
 
 
 def auc_by_group(
@@ -1602,39 +1602,6 @@ def mcnemar_test(
     )
 
 
-def _two_sample_cells(
-    df: DataFrame,
-    group_col: str,
-    class_col: str,
-    value_col: str,
-    class_a,
-    below: dict | None = None,
-) -> DataFrame:
-    """(group, value) tie cells of a two-sample rank test: NULL
-    group/class/value rows excluded, then
-    :func:`~mr_dice_spark.operators.ranks.rank_cells` on ``__v`` within
-    ``__g`` with ``__ta`` (class-A members per cell), plus the group
-    totals ``__nn``/``__na`` on one unordered group window."""
-    base = df.where(
-        F.col(group_col).isNotNull()
-        & F.col(class_col).isNotNull()
-        & F.col(value_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("__g"),
-        (F.col(class_col) == F.lit(class_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    cells = rank_cells(
-        base, ["__g"], "__v", below=below, __ta=F.count_if(F.col("__a"))
-    )
-    w_all = Window.partitionBy("__g")
-    return cells.select(
-        "*",
-        F.sum("__t").over(w_all).alias("__nn"),
-        F.sum("__ta").over(w_all).alias("__na"),
-    )
-
-
 def mann_whitney_u_by_group(
     df: DataFrame,
     group_col: str,
@@ -1663,7 +1630,7 @@ def mann_whitney_u_by_group(
     group-partitioned cumulative window over them, one final aggregate
     — the same single exchange as auc_by_group.
     """
-    cells = _two_sample_cells(df, group_col, class_col, value_col, class_a)
+    cells = two_sample_cells(df, group_col, class_col, value_col, class_a)
     agg = cells.groupBy("__g").agg(
         F.sum("__t").alias("__nn"),
         F.sum("__ta").alias("__na"),
@@ -3632,10 +3599,10 @@ def mood_scale_test(
     their ~N^3/4 magnitude ROUND(double) itself diverges cross-engine —
     see the inline note); z pins at 9dp and rounds at 6.
 
-    Scale shape: :func:`_two_sample_cells` (one exchange), one closing
+    Scale shape: :func:`two_sample_cells` (one exchange), one closing
     aggregate. Returns ``(group, n_a, n_b, t_stat, e_t, z)``.
     """
-    cells = _two_sample_cells(df, group_col, class_col, value_col, class_a)
+    cells = two_sample_cells(df, group_col, class_col, value_col, class_a)
     d = F.col("__r2") - F.col("__nn") - 1  # 2 * (r_i - (N+1)/2)
     return _linear_rank_scale_test(cells, group_col, d * d, 4)
 
@@ -3646,7 +3613,7 @@ def _linear_rank_scale_test(
     """Closing chain shared by :func:`mood_scale_test` (k = 4) and
     :func:`ansari_bradley` (k = 2): exact permutation moments of
     ``T = sum_{i in A} a_i`` from ``score = k * a_i``, an exact long per
-    :func:`_two_sample_cells` cell. Returns ``(group, n_a, n_b,
+    :func:`two_sample_cells` cell. Returns ``(group, n_a, n_b,
     t_stat, e_t, z)``."""
     ts = F.col("__t") * score  # headroom: N * max(score) must fit a long
     agg = cells.groupBy("__g").agg(
@@ -3736,14 +3703,14 @@ def ansari_bradley(
     min(2r, 2N + 2 - 2r) is an exact long; the closing chain is
     mood_scale_test's (:func:`_linear_rank_scale_test`) with k = 2.
 
-    Scale shape: :func:`_two_sample_cells` (one exchange), one closing
+    Scale shape: :func:`two_sample_cells` (one exchange), one closing
     aggregate. Returns ``(group, n_a, n_b, t_stat, e_t, z)``.
 
     Reference parity note: beyond-reference statistics extension (the
     reference engine at NingWang-art/Mr-Dice has no hypothesis-test
     surface).
     """
-    cells = _two_sample_cells(df, group_col, class_col, value_col, class_a)
+    cells = two_sample_cells(df, group_col, class_col, value_col, class_a)
     r2 = F.col("__r2")
     a2 = F.least(r2, 2 * F.col("__nn") + 2 - r2)  # 2 * a_i, exact long
     return _linear_rank_scale_test(cells, group_col, a2, 2)
@@ -3976,7 +3943,7 @@ def lepage_2s(
     mood/ansari, whose e_t emits raw); L is one fixed chain on pinned
     z's, rounded at 6.
 
-    Scale shape: :func:`_two_sample_cells` (one exchange), one closing
+    Scale shape: :func:`two_sample_cells` (one exchange), one closing
     aggregate computing BOTH axes. Returns ``(group, n_a, n_b, z_w,
     z_ab, lepage_l)``.
 
@@ -3984,7 +3951,7 @@ def lepage_2s(
     reference engine at NingWang-art/Mr-Dice has no hypothesis-test
     surface).
     """
-    cells = _two_sample_cells(df, group_col, class_col, value_col, class_a)
+    cells = two_sample_cells(df, group_col, class_col, value_col, class_a)
     r2 = F.col("__r2")
     s2 = F.least(r2, 2 * F.col("__nn") + 2 - r2)  # doubled AB score
     agg = cells.groupBy("__g").agg(
@@ -4076,7 +4043,7 @@ def brunner_munzel(
     convention); means/variances pin at 9dp; w is one fixed chain,
     rounded at 6.
 
-    Scale shape: :func:`_two_sample_cells` plus nothing — the
+    Scale shape: :func:`two_sample_cells` plus nothing — the
     within-sample cumulative counts are rank_cells ``below`` sums on
     the SAME (group, value) ordered window as the pooled ones. Returns
     ``(group, n_a, n_b, p_hat, w)``.
@@ -4086,7 +4053,7 @@ def brunner_munzel(
     surface).
     """
     tb = F.col("__t") - F.col("__ta")
-    cells = _two_sample_cells(
+    cells = two_sample_cells(
         df, group_col, class_col, value_col, class_a,
         below={"__clta": F.col("__ta"), "__cltb": tb},
     )

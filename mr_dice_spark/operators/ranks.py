@@ -26,6 +26,15 @@ Scale shape: one hash aggregate to cells, one window partitioned by
 ``keys`` over cells (bounded by each key's DISTINCT value count, not its
 row count). ``keys=[]`` ranks on a single-partition window — only for
 frames already bounded by construction (one row per block, say).
+
+:func:`two_sample_cells` adds the two-sample split on top: one class-A
+flag, ``__ta`` per cell and the group totals ``__nn``/``__na``. It backs
+the two-sample rank tests in evaluation.py (mann_whitney_u_by_group,
+mood_scale_test, ansari_bradley, lepage_2s, brunner_munzel) and the
+empirical-CDF drift family in timeseries.py (wasserstein_1,
+cramer_von_mises_2s, energy_distance_2s, kuiper_2s,
+anderson_darling_2s), which read their inclusive cumulative counts as
+``strict prefix + own count`` off the same cells.
 """
 
 from __future__ import annotations
@@ -69,3 +78,45 @@ def rank_cells(
         ],
     )
     return ranked.withColumn("__r2", 2 * F.col("__clt") + F.col("__t") + 1)
+
+
+def two_sample_cells(
+    df: DataFrame,
+    group_col: str,
+    class_col: str,
+    value_col: str,
+    class_a,
+    below: dict | None = None,
+    **over: Column,
+) -> DataFrame:
+    """(group, value) tie cells of a two-sample test: NULL
+    group/class/value rows excluded, then :func:`rank_cells` on ``__v``
+    within ``__g`` with ``__ta`` (class-A members per cell), plus the
+    group totals ``__nn``/``__na`` on one unordered group window.
+
+    Each ``over`` column is added in the SAME select, ahead of the
+    totals, so an extra window costs no extra plan node: one on ``__g``
+    joins the totals' Window node, and one on ``__g`` ordered by ``__v``
+    (a lead, say) collapses into the ranking window's. Spark stacks one
+    Window node per spec in order of first appearance and merges a node
+    only into an equal-spec node directly beneath it, so the ordered
+    spec must come first."""
+    base = df.where(
+        F.col(group_col).isNotNull()
+        & F.col(class_col).isNotNull()
+        & F.col(value_col).isNotNull()
+    ).select(
+        F.col(group_col).alias("__g"),
+        (F.col(class_col) == F.lit(class_a)).alias("__a"),
+        F.col(value_col).cast("double").alias("__v"),
+    )
+    cells = rank_cells(
+        base, ["__g"], "__v", below=below, __ta=F.count_if(F.col("__a"))
+    )
+    w_all = Window.partitionBy("__g")
+    return cells.select(
+        "*",
+        *[col.alias(name) for name, col in over.items()],
+        F.sum("__t").over(w_all).alias("__nn"),
+        F.sum("__ta").over(w_all).alias("__na"),
+    )

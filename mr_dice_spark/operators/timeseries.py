@@ -14,8 +14,10 @@ key-shuffle window for the forward fill. Every step is JVM-side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from mr_dice_spark.operators.ranks import two_sample_cells
 
 
 def _bucket_agg(
@@ -1463,6 +1465,70 @@ def chow_test(
     )
 
 
+def _ecdf_cells(
+    df: DataFrame,
+    key_col: str,
+    sample_col: str,
+    value_col: str,
+    sample_a,
+    below: dict | None = None,
+    **over: Column,
+) -> DataFrame:
+    """Pooled (key, value) cells of the empirical-CDF drift family:
+    :func:`~mr_dice_spark.operators.ranks.two_sample_cells` on the rows
+    whose value is not NaN. NaN is non-NULL and sorts last: it would
+    poison the lead gap and ride every guard (NaN survives coalesce)
+    into a NaN statistic, so it is excluded like NULL and the
+    fail-closed contract holds.
+
+    Adds, per cell, the B count ``__tb``, the INCLUSIVE cumulative
+    counts ``__cca``/``__ccb`` (strict prefix + own count) and the key
+    total ``__nb = __nn - __na`` — all exact longs. ``below`` and
+    ``over`` pass through to ``two_sample_cells``.
+    """
+    cells = two_sample_cells(
+        df.where(~F.isnan(F.col(value_col).cast("double"))),
+        key_col,
+        sample_col,
+        value_col,
+        sample_a,
+        below={"__clta": "__ta", **(below or {})},
+        **over,
+    )
+    cca = F.col("__clta") + F.col("__ta")
+    return cells.select(
+        "*",
+        (F.col("__t") - F.col("__ta")).alias("__tb"),
+        cca.alias("__cca"),
+        (F.col("__clt") + F.col("__t") - cca).alias("__ccb"),
+        (F.col("__nn") - F.col("__na")).alias("__nb"),
+    )
+
+
+def _ecdf_per_key(
+    cells: DataFrame, key_col: str, out: dict, **aggs: Column
+) -> DataFrame:
+    """Close an :func:`_ecdf_cells` table to ``(key, n_a, n_b, *out)``:
+    one aggregate per key carrying the totals and each ``aggs`` column,
+    then each ``out`` column rounded at 6 — NULL for keys missing either
+    sample (no distance to a nonexistent distribution: fail-closed)."""
+    both = (F.col("__na") > 0) & (F.col("__nb") > 0)
+    per_key = cells.groupBy("__g").agg(
+        F.max("__na").alias("__na"),
+        F.max("__nb").alias("__nb"),
+        *[agg.alias(name) for name, agg in aggs.items()],
+    )
+    return per_key.select(
+        F.col("__g").alias(key_col),
+        F.col("__na").cast("long").alias("n_a"),
+        F.col("__nb").cast("long").alias("n_b"),
+        *[
+            F.round(F.when(both, col) + F.lit(1e-9), 6).alias(name)
+            for name, col in out.items()
+        ],
+    )
+
+
 def wasserstein_1(
     df: DataFrame,
     key_col: str,
@@ -1481,9 +1547,11 @@ def wasserstein_1(
     Rows where ``sample_col == sample_a`` are sample A; every other
     non-NULL sample value is B (the two_proportion split convention is
     explicit arms; here the caller usually feeds a boolean). NULL
-    key/sample/value rows are excluded. Keys missing either sample
-    report NULL w1 (no distance to a nonexistent distribution —
-    fail-closed).
+    key/sample/value rows and NaN values are excluded. Keys missing
+    either sample report NULL w1 (no distance to a nonexistent
+    distribution — fail-closed). The staging is the shared
+    :func:`~mr_dice_spark.operators.ranks.two_sample_cells` (through
+    :func:`_ecdf_cells`), as for the rest of the ECDF family.
 
     Cross-engine determinism: cell counts and cumulative counts are
     exact integers from the tie-collapsed (key, value) table; each
@@ -1493,44 +1561,21 @@ def wasserstein_1(
     values; the closing sum adds them as exact decimals (the
     durbin_watson convention) so it is order- and engine-invariant.
 
-    Scale shape: one (key, value) cell aggregate, two key-partitioned
-    cumulative windows + one lead sharing the exchange (per-key cell
-    tables are the bounded frames — the kruskal_wallis convention:
-    key by shard/day/type, don't feed one global key a corpus of
-    distinct floats), one final per-key aggregate. Returns
-    ``(key, n_a, n_b, w1)``.
+    Scale shape: one (key, value) cell aggregate, the shared staging's
+    ordered window (strict prefix counts + the lead gap) and key-total
+    window on one exchange (per-key cell tables are the bounded frames
+    — the kruskal_wallis convention: key by shard/day/type, don't feed
+    one global key a corpus of distinct floats), one final per-key
+    aggregate. Returns ``(key, n_a, n_b, w1)``.
     """
-    base = df.select(
-        F.col(key_col).alias("__k"),
-        (F.col(sample_col) == F.lit(sample_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    ).where(
-        F.col(key_col).isNotNull()
-        & F.col(sample_col).isNotNull()
-        & F.col(value_col).isNotNull()
-        # NaN is non-NULL: it would sort last, poison the lead gap and
-        # ride every guard (NaN survives coalesce) into a NaN w1 —
-        # exclude it like NULL so the fail-closed contract holds
-        & ~F.isnan(F.col(value_col).cast("double"))
-    )
-    cells = base.groupBy("__k", "__v").agg(
-        F.count_if(F.col("__a")).alias("__ca"),
-        F.count_if(~F.col("__a")).alias("__cb"),
-    )
-    w_run = (
-        Window.partitionBy("__k")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("__k")
-    w_lead = Window.partitionBy("__k").orderBy("__v")
-    staged = cells.select(
-        "__k",
-        F.sum("__ca").over(w_run).alias("__cca"),
-        F.sum("__cb").over(w_run).alias("__ccb"),
-        F.sum("__ca").over(w_all).alias("__na"),
-        F.sum("__cb").over(w_all).alias("__nb"),
-        (F.lead("__v").over(w_lead) - F.col("__v")).alias("__gap"),
+    w_lead = Window.partitionBy("__g").orderBy("__v")
+    staged = _ecdf_cells(
+        df,
+        key_col,
+        sample_col,
+        value_col,
+        sample_a,
+        __gap=F.lead("__v").over(w_lead) - F.col("__v"),
     )
     # try_divide: a key missing one sample entirely has na or nb = 0 —
     # ANSI long division would raise DIVIDE_BY_ZERO inside the aggregate
@@ -1545,30 +1590,19 @@ def wasserstein_1(
         + F.lit(1e-12),
         9,
     )
-    out = staged.groupBy("__k").agg(
-        F.max("__na").alias("__ta"),
-        F.max("__nb").alias("__tb"),
-        # the 9dp-pinned terms sum as exact decimals (the durbin_watson
-        # convention) — order- and engine-invariant, so the closing sum
-        # can never straddle the 6dp output grid across fresh processes
-        F.sum(
-            F.when(F.col("__gap").isNotNull(), term).cast("decimal(19,9)")
-        )
-        .cast("double")
-        .alias("__w1"),
-    )
-    w1 = F.when(
-        (F.col("__ta") > 0) & (F.col("__tb") > 0),
+    return _ecdf_per_key(
+        staged,
+        key_col,
         # a key with one distinct value has no gap terms: SUM over an
         # empty set is NULL, but the true W1 between two point masses
         # at the same value is 0
-        F.coalesce(F.col("__w1"), F.lit(0.0)),
-    )
-    return out.select(
-        F.col("__k").alias(key_col),
-        F.col("__ta").cast("long").alias("n_a"),
-        F.col("__tb").cast("long").alias("n_b"),
-        F.round(w1 + F.lit(1e-9), 6).alias("w1"),
+        {"w1": F.coalesce(F.col("__w1"), F.lit(0.0))},
+        # the 9dp-pinned terms sum as exact decimals (the durbin_watson
+        # convention) — order- and engine-invariant, so the closing sum
+        # can never straddle the 6dp output grid across fresh processes
+        __w1=F.sum(
+            F.when(F.col("__gap").isNotNull(), term).cast("decimal(19,9)")
+        ).cast("double"),
     )
 
 
@@ -2316,9 +2350,11 @@ def cramer_von_mises_2s(
     separates 'moved far' from 'moved everywhere'.
 
     Sample split, NULL/NaN exclusion, and the fail-closed contract
-    follow :func:`wasserstein_1` verbatim: rows where ``sample_col ==
-    sample_a`` are A, every other non-NULL sample is B; keys missing
-    either sample report NULL cvm.
+    come from the shared staging
+    (:func:`~mr_dice_spark.operators.ranks.two_sample_cells` through
+    :func:`_ecdf_cells`): rows where ``sample_col == sample_a`` are A,
+    every other non-NULL sample is B; keys missing either sample report
+    NULL cvm.
 
     Cross-engine determinism: cell and cumulative counts are exact
     integers; each pooled term ``(ca+cb) * (cca/na - ccb/nb)^2`` is a
@@ -2326,67 +2362,26 @@ def cramer_von_mises_2s(
     exact decimal(19,9) (the durbin_watson convention) and the closing
     scale factor is one multiply/divide on exact counts, rounded at 6.
 
-    Scale shape: identical to wasserstein_1 MINUS the lead window — one
-    (key, value) cell aggregate, one key-partitioned cumulative window
-    + one whole-partition window sharing the exchange, one final per-key
-    aggregate. Returns ``(key, n_a, n_b, cvm)``.
+    Scale shape: the shared staging — one (key, value) cell aggregate,
+    one key-partitioned ordered window + one key-total window sharing
+    the exchange — then one final per-key aggregate. Returns
+    ``(key, n_a, n_b, cvm)``.
     """
-    base = df.select(
-        F.col(key_col).alias("__k"),
-        (F.col(sample_col) == F.lit(sample_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    ).where(
-        F.col(key_col).isNotNull()
-        & F.col(sample_col).isNotNull()
-        & F.col(value_col).isNotNull()
-        # NaN is non-NULL and sorts last: exclude like NULL so the
-        # fail-closed contract holds (the wasserstein_1 guard)
-        & ~F.isnan(F.col(value_col).cast("double"))
-    )
-    cells = base.groupBy("__k", "__v").agg(
-        F.count_if(F.col("__a")).alias("__ca"),
-        F.count_if(~F.col("__a")).alias("__cb"),
-    )
-    w_run = (
-        Window.partitionBy("__k")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("__k")
-    staged = cells.select(
-        "__k",
-        (F.col("__ca") + F.col("__cb")).alias("__w"),
-        F.sum("__ca").over(w_run).alias("__cca"),
-        F.sum("__cb").over(w_run).alias("__ccb"),
-        F.sum("__ca").over(w_all).alias("__na"),
-        F.sum("__cb").over(w_all).alias("__nb"),
-    )
+    cells = _ecdf_cells(df, key_col, sample_col, value_col, sample_a)
     # try_divide: a key missing one sample has na or nb = 0 — NULL rides
     # to the fail-closed guard instead of raising (the wasserstein_1 fix)
     gap = F.try_divide(F.col("__cca").cast("double"), F.col("__na")) - F.try_divide(
         F.col("__ccb").cast("double"), F.col("__nb")
     )
-    term = F.round(
-        gap * gap * F.col("__w").cast("double") + F.lit(1e-12), 9
-    )
-    out = staged.groupBy("__k").agg(
-        F.max("__na").alias("__ta"),
-        F.max("__nb").alias("__tb"),
-        F.sum(term.cast("decimal(19,9)")).cast("double").alias("__s"),
-    )
-    nn = (F.col("__ta") + F.col("__tb")).cast("double")
-    cvm = F.when(
-        (F.col("__ta") > 0) & (F.col("__tb") > 0),
-        F.col("__ta").cast("double")
-        * F.col("__tb").cast("double")
-        / (nn * nn)
-        * F.col("__s"),
-    )
-    return out.select(
-        F.col("__k").alias(key_col),
-        F.col("__ta").cast("long").alias("n_a"),
-        F.col("__tb").cast("long").alias("n_b"),
-        F.round(cvm + F.lit(1e-9), 6).alias("cvm"),
+    term = F.round(gap * gap * F.col("__t").cast("double") + F.lit(1e-12), 9)
+    na = F.col("__na").cast("double")
+    nb = F.col("__nb").cast("double")
+    nn = (F.col("__na") + F.col("__nb")).cast("double")
+    return _ecdf_per_key(
+        cells,
+        key_col,
+        {"cvm": na * nb / (nn * nn) * F.col("__s")},
+        __s=F.sum(term.cast("decimal(19,9)")).cast("double"),
     )
 
 
@@ -2415,7 +2410,10 @@ def energy_distance_2s(
     contribute exactly 0). No pairwise join exists anywhere.
 
     Sample split, NULL/NaN exclusion, fail-closed NULLs on keys missing
-    either sample: the :func:`wasserstein_1` contract.
+    either sample: the shared staging
+    (:func:`~mr_dice_spark.operators.ranks.two_sample_cells` through
+    :func:`_ecdf_cells`); the value sums ride its ordered window as
+    ``below`` strict prefixes and its key window as totals.
 
     Cross-engine determinism: counts are exact integers and value sums
     exact decimals (contract: values on a <= 6dp grid, |v| < 1e10 —
@@ -2426,47 +2424,30 @@ def energy_distance_2s(
     decimal(19,6); the three closing expectations are single divisions
     on exact operands, pinned at 9dp; output rounds at 6.
 
-    Scale shape: one (key, value) cell aggregate, one key-partitioned
-    cumulative window + one whole-partition window sharing the
-    exchange, one final per-key aggregate — wasserstein_1's exact plan.
+    Scale shape: the shared staging — one (key, value) cell aggregate,
+    one key-partitioned ordered window + one key-total window sharing
+    the exchange — then one final per-key aggregate.
     Returns ``(key, n_a, n_b, energy_d2, energy_d)``.
     """
-    base = df.select(
-        F.col(key_col).alias("__k"),
-        (F.col(sample_col) == F.lit(sample_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    ).where(
-        F.col(key_col).isNotNull()
-        & F.col(sample_col).isNotNull()
-        & F.col(value_col).isNotNull()
-        & ~F.isnan(F.col(value_col).cast("double"))
-    )
     vd = F.col("__v").cast("decimal(19,6)")
-    cells = base.groupBy("__k", "__v").agg(
-        F.count_if(F.col("__a")).alias("__ca"),
-        F.count_if(~F.col("__a")).alias("__cb"),
+    sa = F.col("__ta").cast("decimal(19,0)") * vd
+    sb = (F.col("__t") - F.col("__ta")).cast("decimal(19,0)") * vd
+    w_all = Window.partitionBy("__g")
+    cells = _ecdf_cells(
+        df,
+        key_col,
+        sample_col,
+        value_col,
+        sample_a,
+        below={"__clsa": sa, "__clsb": sb},
+        __tsa=F.sum(sa).over(w_all).cast("double"),
+        __tsb=F.sum(sb).over(w_all).cast("double"),
     )
-    w_run = (
-        Window.partitionBy("__k")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("__k")
-    sa = F.col("__ca").cast("decimal(19,0)") * vd
-    sb = F.col("__cb").cast("decimal(19,0)") * vd
+    # inclusive value sums: strict prefix + own cell, exact decimals
     staged = cells.select(
-        "__k",
-        "__v",
-        "__ca",
-        "__cb",
-        F.sum("__ca").over(w_run).alias("__cca"),
-        F.sum("__cb").over(w_run).alias("__ccb"),
-        F.sum(sa).over(w_run).cast("double").alias("__csa"),
-        F.sum(sb).over(w_run).cast("double").alias("__csb"),
-        F.sum("__ca").over(w_all).alias("__na"),
-        F.sum("__cb").over(w_all).alias("__nb"),
-        F.sum(sa).over(w_all).cast("double").alias("__tsa"),
-        F.sum(sb).over(w_all).cast("double").alias("__tsb"),
+        "*",
+        (F.col("__clsa") + sa).cast("double").alias("__csa"),
+        (F.col("__clsb") + sb).cast("double").alias("__csb"),
     )
 
     def _absdist(ccnt, csum, n, tot):
@@ -2475,39 +2456,30 @@ def energy_distance_2s(
         above = (tot - csum) - (n - ccnt).cast("double") * F.col("__v")
         return below + above
 
-    cross = F.col("__cb").cast("double") * _absdist(
+    dist_a = _absdist(
         F.col("__cca"), F.col("__csa"), F.col("__na"), F.col("__tsa")
     )
-    within_a = F.col("__ca").cast("double") * _absdist(
-        F.col("__cca"), F.col("__csa"), F.col("__na"), F.col("__tsa")
-    )
-    within_b = F.col("__cb").cast("double") * _absdist(
+    dist_b = _absdist(
         F.col("__ccb"), F.col("__csb"), F.col("__nb"), F.col("__tsb")
     )
-    out = staged.groupBy("__k").agg(
-        F.max("__na").alias("__ta"),
-        F.max("__nb").alias("__tb"),
-        F.sum(cross.cast("decimal(19,6)")).cast("double").alias("__x"),
-        F.sum(within_a.cast("decimal(19,6)")).cast("double").alias("__wa"),
-        F.sum(within_b.cast("decimal(19,6)")).cast("double").alias("__wb"),
-    )
-    ta_d = F.col("__ta").cast("double")
-    tb_d = F.col("__tb").cast("double")
-    e_xy = F.round(F.col("__x") / (ta_d * tb_d) + F.lit(1e-12), 9)
-    e_xx = F.round(F.col("__wa") / (ta_d * ta_d) + F.lit(1e-12), 9)
-    e_yy = F.round(F.col("__wb") / (tb_d * tb_d) + F.lit(1e-12), 9)
-    d2 = F.when(
-        (F.col("__ta") > 0) & (F.col("__tb") > 0),
-        # pinning can leave a ~1e-9 negative residue on identical
-        # distributions; clamp so energy_d's sqrt never sees it
-        F.greatest(2.0 * e_xy - e_xx - e_yy, F.lit(0.0)),
-    )
-    return out.select(
-        F.col("__k").alias(key_col),
-        F.col("__ta").cast("long").alias("n_a"),
-        F.col("__tb").cast("long").alias("n_b"),
-        F.round(d2 + F.lit(1e-9), 6).alias("energy_d2"),
-        F.round(F.sqrt(d2) + F.lit(1e-9), 6).alias("energy_d"),
+    cross = F.col("__tb").cast("double") * dist_a
+    within_a = F.col("__ta").cast("double") * dist_a
+    within_b = F.col("__tb").cast("double") * dist_b
+    na = F.col("__na").cast("double")
+    nb = F.col("__nb").cast("double")
+    e_xy = F.round(F.col("__x") / (na * nb) + F.lit(1e-12), 9)
+    e_xx = F.round(F.col("__wa") / (na * na) + F.lit(1e-12), 9)
+    e_yy = F.round(F.col("__wb") / (nb * nb) + F.lit(1e-12), 9)
+    # pinning can leave a ~1e-9 negative residue on identical
+    # distributions; clamp so energy_d's sqrt never sees it
+    d2 = F.greatest(2.0 * e_xy - e_xx - e_yy, F.lit(0.0))
+    return _ecdf_per_key(
+        staged,
+        key_col,
+        {"energy_d2": d2, "energy_d": F.sqrt(d2)},
+        __x=F.sum(cross.cast("decimal(19,6)")).cast("double"),
+        __wa=F.sum(within_a.cast("decimal(19,6)")).cast("double"),
+        __wb=F.sum(within_b.cast("decimal(19,6)")).cast("double"),
     )
 
 
@@ -2533,9 +2505,11 @@ def kuiper_2s(
     square), Kuiper (two-sided sup).
 
     Sample split, NULL/NaN exclusion, and the fail-closed contract
-    follow :func:`wasserstein_1` verbatim: rows where ``sample_col ==
-    sample_a`` are A, every other non-NULL sample is B; keys missing
-    either sample report NULL d_plus/d_minus/kuiper_v.
+    come from the shared staging
+    (:func:`~mr_dice_spark.operators.ranks.two_sample_cells` through
+    :func:`_ecdf_cells`): rows where ``sample_col == sample_a`` are A,
+    every other non-NULL sample is B; keys missing either sample report
+    NULL d_plus/d_minus/kuiper_v.
 
     Cross-engine determinism: cell and cumulative counts are exact
     integers; each per-cell gap ``cca/na - ccb/nb`` is a fixed IEEE
@@ -2544,44 +2518,16 @@ def kuiper_2s(
     gap 0, so D+ and D- are >= 0 by construction; V is one addition of
     pinned maxima, rounded at 6.
 
-    Scale shape: identical to cramer_von_mises_2s — one (key, value)
-    cell aggregate, one key-partitioned cumulative window + one
-    whole-partition window sharing the exchange, one final per-key
-    aggregate. Returns ``(key, n_a, n_b, d_plus, d_minus, kuiper_v)``.
+    Scale shape: the shared staging — one (key, value) cell aggregate,
+    one key-partitioned ordered window + one key-total window sharing
+    the exchange — then one final per-key aggregate. Returns
+    ``(key, n_a, n_b, d_plus, d_minus, kuiper_v)``.
 
     Reference parity note: beyond-reference statistics extension (the
     reference engine at NingWang-art/Mr-Dice has no drift-test surface);
     same bucketed-cells contract as the rest of this module.
     """
-    base = df.select(
-        F.col(key_col).alias("__k"),
-        (F.col(sample_col) == F.lit(sample_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    ).where(
-        F.col(key_col).isNotNull()
-        & F.col(sample_col).isNotNull()
-        & F.col(value_col).isNotNull()
-        # NaN is non-NULL and sorts last: exclude like NULL so the
-        # fail-closed contract holds (the wasserstein_1 guard)
-        & ~F.isnan(F.col(value_col).cast("double"))
-    )
-    cells = base.groupBy("__k", "__v").agg(
-        F.count_if(F.col("__a")).alias("__ca"),
-        F.count_if(~F.col("__a")).alias("__cb"),
-    )
-    w_run = (
-        Window.partitionBy("__k")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("__k")
-    staged = cells.select(
-        "__k",
-        F.sum("__ca").over(w_run).alias("__cca"),
-        F.sum("__cb").over(w_run).alias("__ccb"),
-        F.sum("__ca").over(w_all).alias("__na"),
-        F.sum("__cb").over(w_all).alias("__nb"),
-    )
+    cells = _ecdf_cells(df, key_col, sample_col, value_col, sample_a)
     # try_divide: a key missing one sample has na or nb = 0 — NULL rides
     # to the fail-closed guard instead of raising (the wasserstein_1 fix)
     gap = F.round(
@@ -2590,22 +2536,13 @@ def kuiper_2s(
         + F.lit(1e-12),
         9,
     )
-    out = staged.groupBy("__k").agg(
-        F.max("__na").alias("__ta"),
-        F.max("__nb").alias("__tb"),
-        F.max(gap).alias("__dp"),
-        F.max(-gap).alias("__dm"),
-    )
-    both = (F.col("__ta") > 0) & (F.col("__tb") > 0)
-    return out.select(
-        F.col("__k").alias(key_col),
-        F.col("__ta").cast("long").alias("n_a"),
-        F.col("__tb").cast("long").alias("n_b"),
-        F.round(F.when(both, F.col("__dp")) + F.lit(1e-9), 6).alias("d_plus"),
-        F.round(F.when(both, F.col("__dm")) + F.lit(1e-9), 6).alias("d_minus"),
-        F.round(
-            F.when(both, F.col("__dp") + F.col("__dm")) + F.lit(1e-9), 6
-        ).alias("kuiper_v"),
+    dp, dm = F.col("__dp"), F.col("__dm")
+    return _ecdf_per_key(
+        cells,
+        key_col,
+        {"d_plus": dp, "d_minus": dm, "kuiper_v": dp + dm},
+        __dp=F.max(gap),
+        __dm=F.max(-gap),
     )
 
 
@@ -2635,64 +2572,36 @@ def anderson_darling_2s(
     the variance table and is one scalar lookup away.
 
     Sample split, NULL/NaN exclusion, and the fail-closed contract
-    follow :func:`wasserstein_1`: keys missing either sample — or with
-    a single pooled distinct value (every denominator 0) — report NULL
-    ad.
+    come from the shared staging
+    (:func:`~mr_dice_spark.operators.ranks.two_sample_cells` through
+    :func:`_ecdf_cells`): keys missing either sample — or with a single
+    pooled distinct value (every denominator 0) — report NULL ad.
 
     Cross-engine determinism: all mid-cumulatives are half-integers,
-    carried DOUBLED as exact longs (2B_j = 2 cum_j - l_j, 2M_sj =
-    2 cum_sj - l_sj — the mann_whitney doubling discipline); each cell
+    carried DOUBLED as exact longs (2B_j = 2 cum_j - l_j = ``__r2 - 1``,
+    2M_sj = 2 cum_sj - l_sj — the rank_cells doubling); each cell
     term is one fixed IEEE chain on exact integer-valued doubles
     (``l * (N*2M - n*2B)^2 / (2B*(2N-2B) - N*l) / N`` — the doubled
     numerator and denominator carry the same factor 4), pinned at 9dp,
     summed as exact decimal(19,9); the closing scale is one
     multiply/divide chain on exact counts, rounded at 6.
 
-    Scale shape: identical to cramer_von_mises_2s — one (key, value)
-    cell aggregate, cumulative + whole-partition windows on one key
-    exchange, one final per-key aggregate. Returns
-    ``(key, n_a, n_b, ad)``.
+    Scale shape: the shared staging — one (key, value) cell aggregate,
+    ordered + key-total windows on one key exchange — then one final
+    per-key aggregate. Returns ``(key, n_a, n_b, ad)``.
 
     Reference parity note: beyond-reference statistics extension (the
     reference engine at NingWang-art/Mr-Dice has no drift-test
     surface).
     """
-    base = df.select(
-        F.col(key_col).alias("__k"),
-        (F.col(sample_col) == F.lit(sample_a)).alias("__a"),
-        F.col(value_col).cast("double").alias("__v"),
-    ).where(
-        F.col(key_col).isNotNull()
-        & F.col(sample_col).isNotNull()
-        & F.col(value_col).isNotNull()
-        & ~F.isnan(F.col(value_col).cast("double"))
-    )
-    cells = base.groupBy("__k", "__v").agg(
-        F.count_if(F.col("__a")).alias("__la"),
-        F.count_if(~F.col("__a")).alias("__lb"),
-    )
-    w_run = (
-        Window.partitionBy("__k")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("__k")
-    l_j = F.col("__la") + F.col("__lb")
-    staged = cells.select(
-        "__k",
-        F.col("__la"),
-        F.col("__lb"),
-        l_j.alias("__l"),
-        (2 * F.sum("__la").over(w_run) - F.col("__la")).alias("__ma2"),
-        (2 * F.sum("__lb").over(w_run) - F.col("__lb")).alias("__mb2"),
-        (2 * F.sum(l_j).over(w_run) - l_j).alias("__b2"),
-        F.sum("__la").over(w_all).alias("__na"),
-        F.sum("__lb").over(w_all).alias("__nb"),
-        F.sum(l_j).over(w_all).alias("__nn"),
-    )
+    cells = _ecdf_cells(df, key_col, sample_col, value_col, sample_a)
     n_d = F.col("__nn").cast("double")
-    l_d = F.col("__l").cast("double")
-    b2 = F.col("__b2").cast("double")
+    l_d = F.col("__t").cast("double")
+    # doubled mid-cumulatives: 2B = 2 cum - l = __r2 - 1 (pooled),
+    # 2M_a = 2 (strict_a + l_a) - l_a = 2 strict_a + l_a
+    b2 = (F.col("__r2") - 1).cast("double")
+    ma2 = 2 * F.col("__clta") + F.col("__ta")
+    mb2 = 2 * F.col("__ccb") - F.col("__tb")
     # doubled-form denominator: 4*(B(N-B) - N*l/4) = 2B(2N-2B) - N*l
     den = b2 * (2.0 * n_d - b2) - n_d * l_d
 
@@ -2703,32 +2612,24 @@ def anderson_darling_2s(
             F.try_divide(l_d * d * d, den) / n_d + F.lit(1e-12), 9
         )
 
-    term_a = _term(F.col("__ma2"), F.col("__na"))
-    term_b = _term(F.col("__mb2"), F.col("__nb"))
-    out = staged.groupBy("__k").agg(
-        F.max("__na").alias("__ta"),
-        F.max("__nb").alias("__tb"),
-        F.max("__nn").alias("__tn"),
-        F.sum(term_a.cast("decimal(19,9)")).cast("double").alias("__sa"),
-        F.sum(term_b.cast("decimal(19,9)")).cast("double").alias("__sb"),
-    )
-    ta = F.col("__ta").cast("double")
-    tb = F.col("__tb").cast("double")
-    tn = F.col("__tn").cast("double")
-    ad = F.when(
-        (F.col("__ta") > 0)
-        & (F.col("__tb") > 0)
-        & F.col("__sa").isNotNull()
-        & F.col("__sb").isNotNull(),
-        (tn - 1.0)
-        / tn
-        * (F.col("__sa") / ta + F.col("__sb") / tb),
-    )
-    return out.select(
-        F.col("__k").alias(key_col),
-        F.col("__ta").cast("long").alias("n_a"),
-        F.col("__tb").cast("long").alias("n_b"),
-        F.round(ad + F.lit(1e-9), 6).alias("ad"),
+    term_a = _term(ma2, F.col("__na"))
+    term_b = _term(mb2, F.col("__nb"))
+    return _ecdf_per_key(
+        cells,
+        key_col,
+        # a NULL __sa/__sb (every denominator 0: a single pooled
+        # distinct value) propagates to a NULL ad
+        {
+            "ad": (n_d - 1.0)
+            / n_d
+            * (
+                F.col("__sa") / F.col("__na").cast("double")
+                + F.col("__sb") / F.col("__nb").cast("double")
+            )
+        },
+        __nn=F.max("__nn"),
+        __sa=F.sum(term_a.cast("decimal(19,9)")).cast("double"),
+        __sb=F.sum(term_b.cast("decimal(19,9)")).cast("double"),
     )
 
 

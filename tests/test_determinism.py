@@ -48,6 +48,13 @@ SENSITIVE = [
     "quade_weekday_value_by_type",
     "page_trend_weekly_by_weekday",
     "dunn_posthoc_value_by_weekday",
+    # empirical-CDF drift family on the shared two-sample cells: exact
+    # counts per (key, value) cell, 9dp-pinned terms summed as decimals
+    "w1_value_weekend_by_type",
+    "cvm_value_weekend_by_type",
+    "energy_dist_value_weekend_by_type",
+    "kuiper_value_weekend_by_type",
+    "ad_value_weekend_by_type",
 ]
 
 

@@ -2,6 +2,9 @@
 codegen coverage. A change that silently degrades the physical plan fails
 here even when results stay correct."""
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from mr_dice_spark.catalog import Catalog
@@ -11,6 +14,7 @@ from mr_dice_spark.plans.inspect import (
     assert_pushed,
     broadcast_join_count,
     codegen_stage_count,
+    formatted_plan,
     has_cartesian,
     physical_plan,
     pushed_filters,
@@ -2290,3 +2294,28 @@ def test_seasonal_mk_phase_cut_pairs(spark, sf_dir):
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
     assert "SinglePartition" not in plan
+
+
+def test_demo9_one_lineitem_scan_no_join(spark, sf_dir):
+    # the multi-flag filter is a HAVING on the final group-by, not a
+    # semi-join of the (supplier, flag) pairs back onto a second scan
+    plan = formatted_plan(GOLDEN["demo9_selectivity_matrix"].spark(spark, sf_dir))
+    assert plan.split("\n\n")[0].count("Scan parquet") == 1
+    assert "Join" not in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["wasserstein_1", "cramer_von_mises_2s", "energy_distance_2s",
+     "kuiper_2s", "anderson_darling_2s"],
+)
+def test_ecdf_family_two_windows_one_key_exchange(spark, name):
+    # shared two-sample staging: after the cell aggregate, one exchange
+    # on the key feeds one ordered and one key-total Window node; w1's
+    # lead and energy's value totals must ride those, not add a third
+    from mr_dice_spark.operators import timeseries
+
+    df = spark.createDataFrame([("a", True, 1.0)], "k string, s boolean, v double")
+    out = getattr(timeseries, name)(df, "k", "s", "v", True)
+    assert len(re.findall(r"^\(\d+\) Window", formatted_plan(out), re.M)) == 2
+    assert shuffle_count(out) == 2

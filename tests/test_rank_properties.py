@@ -242,10 +242,26 @@ _TWO_SAMPLE = {
     "ansari_bradley": ["n_a", "n_b", "t_stat", "e_t", "z"],
     "lepage_2s": ["n_a", "n_b", "z_w", "z_ab", "lepage_l"],
     "brunner_munzel": ["n_a", "n_b", "p_hat", "w"],
+    # the empirical-CDF drift family (timeseries.py)
+    "wasserstein_1": ["n_a", "n_b", "w1"],
+    "cramer_von_mises_2s": ["n_a", "n_b", "cvm"],
+    "energy_distance_2s": ["n_a", "n_b", "energy_d2", "energy_d"],
+    "kuiper_2s": ["n_a", "n_b", "d_plus", "d_minus", "kuiper_v"],
+    "anderson_darling_2s": ["n_a", "n_b", "ad"],
 }
+_ECDF = ["wasserstein_1", "cramer_von_mises_2s", "energy_distance_2s",
+         "kuiper_2s", "anderson_darling_2s"]
+# w1 and energy read in value units, so a monotone map moves them
+_RANK_ONLY = sorted(set(_TWO_SAMPLE) - {"wasserstein_1", "energy_distance_2s"})
 
 
-@pytest.mark.parametrize("name", sorted(_TWO_SAMPLE))
+def _two_sample_fn(name):
+    from mr_dice_spark.operators import evaluation, timeseries
+
+    return getattr(timeseries if name in _ECDF else evaluation, name)
+
+
+@pytest.mark.parametrize("name", _RANK_ONLY)
 @settings(max_examples=5, deadline=None)
 @given(
     xs=st.lists(
@@ -258,14 +274,13 @@ _TWO_SAMPLE = {
     )
 )
 def test_two_sample_monotone_invariant(spark, name, xs):
-    """The two-sample rank tests see values only through their tie-cell
-    ranks, so the strictly increasing v -> (2v+1)^3 changes nothing."""
-    from mr_dice_spark.operators import evaluation
-
+    """The rank tests and the CDF-gap statistics see values only through
+    their tie-cell order, so the strictly increasing v -> (2v+1)^3
+    changes nothing."""
     rows = [("a", str(c), float(v)) for c, v in xs]
     rows += [("b", str(c), float(2 * v + 1) ** 3) for c, v in xs]
     df = spark.createDataFrame(rows, "g string, c string, v double")
-    fn = getattr(evaluation, name)
+    fn = _two_sample_fn(name)
     got = {r["g"]: r for r in fn(df, "g", "c", "v", "1").collect()}
     cols = _TWO_SAMPLE[name]
     assert [got["a"][c] for c in cols] == [got["b"][c] for c in cols]
@@ -274,17 +289,39 @@ def test_two_sample_monotone_invariant(spark, name, xs):
 @pytest.mark.parametrize("name", sorted(_TWO_SAMPLE))
 def test_two_sample_degenerate_groups_fail_closed(spark, name):
     """A one-row group, a one-class group and a one-row sample must
-    come back as rows with NULL z/w — never an ANSI divide-by-zero."""
-    from mr_dice_spark.operators import evaluation
-
+    come back as rows with a NULL statistic — never an ANSI
+    divide-by-zero."""
     rows = [("solo", "1", 1.0)]
     rows += [("one_class", "0", float(v)) for v in (1, 2, 3)]
     rows += [("singleton_a", "1", 5.0)]
     rows += [("singleton_a", "0", float(v)) for v in (1, 2, 2, 7)]
     df = spark.createDataFrame(rows, "g string, c string, v double")
-    fn = getattr(evaluation, name)
+    fn = _two_sample_fn(name)
     got = {r["g"]: r for r in fn(df, "g", "c", "v", "1").collect()}
     assert set(got) == {"solo", "one_class", "singleton_a"}
     last = _TWO_SAMPLE[name][-1]
     assert got["solo"][last] is None and got["one_class"][last] is None
     assert got["singleton_a"]["n_a"] == 1 and got["singleton_a"]["n_b"] == 4
+
+
+@pytest.mark.parametrize("name", _ECDF)
+def test_ecdf_null_and_nan_rows_change_nothing(spark, name):
+    """NULL key, NULL sample, NULL value and NaN value rows are all
+    excluded: adding them leaves every output row as it was (a NaN-only
+    key never appears)."""
+    nan = float("nan")
+    rows = [("x", "1", float(v)) for v in (1, 2, 2, 5)]
+    rows += [("x", "0", float(v)) for v in (0, 2, 3, 3, 8)]
+    rows += [("y", "1", 4.0), ("y", "0", 4.0), ("y", "0", 6.0)]
+    noise = [(None, "1", 1.0), ("x", None, 2.0), ("x", "1", None)]
+    noise += [("x", "0", nan), ("y", "1", nan), ("z", "1", nan)]
+    schema = "g string, c string, v double"
+    fn = _two_sample_fn(name)
+
+    def run(rs):
+        df = spark.createDataFrame(rs, schema)
+        return sorted(tuple(r) for r in fn(df, "g", "c", "v", "1").collect())
+
+    clean = run(rows)
+    assert [r[0] for r in clean] == ["x", "y"]
+    assert run(rows + noise) == clean

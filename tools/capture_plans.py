@@ -3,8 +3,20 @@ extended) into plans/<tag>/<query>_<suffix>.txt — the optimization-round
 evidence trail (guide §1: record plan shape before and after).
 
 Usage:
-  python tools/capture_plans.py before          # -> plans/r11/<q>_before.txt
-  python tools/capture_plans.py after q1 q2     # only named queries
+  python tools/capture_plans.py before          # -> plans/$PLANS_TAG/<q>_before.txt
+  python tools/capture_plans.py after q1 q2     # only named queries (any golden)
+
+Environment:
+  PLANS_TAG           output subdirectory under plans/ (default r11); set
+                      it for every new capture so older rounds' files
+                      are not overwritten
+  SPARK_GRAFT_SF_DIR  scale-factor directory the goldens read (default:
+                      the sf0.1 test data)
+
+Example: a before/after pair at sf0.01, "before" run in a checkout of the
+parent commit, "after" in the working tree:
+  PLANS_TAG=r14 SPARK_GRAFT_SF_DIR=<testdata>/sf0.01 \
+      python tools/capture_plans.py before demo9_selectivity_matrix
 """
 
 from __future__ import annotations
