@@ -26,25 +26,27 @@ the statistically honest shape (per-slice AUC, not one pooled curve).
 Laziness contract: every operator here returns an unexecuted plan
 EXCEPT these, which run Spark jobs at construction:
 
-* ``fleiss_kappa``, ``kendalls_w``, ``friedman_test``, ``icc_two_way``,
-  ``quade_test`` and ``page_trend_test`` pin the panel
-  (``localCheckpoint``) and run a 1-row panel-shape probe
+* ``kendalls_w``, ``friedman_test``, ``icc_two_way``, ``quade_test``
+  and ``page_trend_test`` stage through ``_complete_panel``: it pins the
+  panel cells (``localCheckpoint``) and runs one 1-row shape probe
   (``.first()``) — their statistics are undefined on ragged panels, and
   deferring the validation would mean silently computing a wrong
-  number. All six fail closed with a 1-row NULL frame on EMPTY input;
-  only a genuinely malformed panel raises.
+  number. ``fleiss_kappa`` pins its (unit, label) counts and probes the
+  per-unit rating counts the same way. All six fail closed with a 1-row
+  NULL frame on EMPTY input; only a genuinely malformed panel raises.
 * ``srm_check`` collects a 1-row unknown-arm probe and raises on a hit.
 * ``bradley_terry``, ``bcubed_scores``, ``adjusted_rand_index``,
   ``logrank_test``, ``randomization_test``, ``cronbach_alpha``,
   ``hodges_lehmann_shift``, ``krippendorff_alpha_nominal``,
-  ``brier_decomposition``, ``benjamini_hochberg``, ``cochran_q`` and
-  ``stuart_maxwell_3`` pin a frame several branches derive from (or an
-  iteration state) with ``localCheckpoint(eager=True)``.
+  ``brier_decomposition``, ``benjamini_hochberg``, ``cochran_q`` (its
+  cells through ``_panel_cells``) and ``stuart_maxwell_3`` pin a frame
+  several branches derive from (or an iteration state) with
+  ``localCheckpoint(eager=True)``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mr_dice_spark.operators.ranks import rank_cells, two_sample_cells
@@ -2746,6 +2748,84 @@ def benjamini_hochberg(
     )
 
 
+def _panel_cells(
+    df: DataFrame,
+    row_col: str,
+    col_col: str,
+    value: Column,
+    aliases: tuple[str, str, str],
+) -> DataFrame:
+    """The pinned ``(row, col) -> value`` cells of a two-way panel, named
+    by ``aliases``. Rows whose row, col or CAST ``value`` is NULL are
+    excluded (filtering on the cast value, the decile_lift convention:
+    a non-NULL input that casts to NULL is dropped, never left as a
+    NULL inside a cell); duplicate ``(row, col)`` observations collapse
+    by MAX. The cells are pinned with ``localCheckpoint(eager=True)``
+    because every consumer derives several branches from them."""
+    r, c, v = aliases
+    return (
+        df.where(
+            F.col(row_col).isNotNull()
+            & F.col(col_col).isNotNull()
+            & value.isNotNull()
+        )
+        .groupBy(F.col(row_col).alias(r), F.col(col_col).alias(c))
+        .agg(F.max(value).alias(v))
+        .localCheckpoint(eager=True)
+    )
+
+
+# the two panel layouts: (row, col, value) cell aliases, and the nouns
+# of the ragged-panel error "every <row> must <verb> every <col>"
+_RATER_PANEL = (("__j", "__i", "__s"), ("rater", "score", "item"))
+_BLOCK_PANEL = (("__b", "__t", "__s"), ("block", "hold", "treatment"))
+
+
+def _complete_panel(
+    df: DataFrame,
+    op: str,
+    row_col: str,
+    col_col: str,
+    value_col: str,
+    layout: tuple[tuple[str, str, str], tuple[str, str, str]],
+    **probe,
+):
+    """The complete-panel contract of the blocked-design and agreement
+    tests (kendalls_w, friedman_test, icc_two_way, quade_test,
+    page_trend_test): every row must hold every col exactly once.
+
+    Stages :func:`_panel_cells` on the double-cast ``value_col``, then
+    runs ONE eager 1-row shape probe over the pinned cells: distinct
+    rows, distinct cols, the cell count, plus the ``probe`` aggregates
+    (name -> Column) a caller rides on the same job. A ragged panel
+    (cells != rows x cols) raises ``ValueError`` naming ``op`` — a
+    statistic over a ragged panel would be silently wrong, so the
+    check cannot be deferred, and construction runs Spark jobs (the
+    pin and the probe). Returns ``(cells, n_rows, n_cols, shape)``
+    where ``shape`` is the probe row; ``n_rows == 0`` means the input
+    was empty after NULL filtering, and the caller returns its
+    fail-closed 1-row NULL frame.
+    """
+    aliases, (row, verb, col) = layout
+    obs = _panel_cells(
+        df, row_col, col_col, F.col(value_col).cast("double"), aliases
+    )
+    shape = obs.agg(
+        F.countDistinct(aliases[0]).alias("__rows"),
+        F.countDistinct(aliases[1]).alias("__cols"),
+        F.count(F.lit(1)).alias("__cells"),
+        *(e.alias(name) for name, e in probe.items()),
+    ).first()
+    rows, cols, cells = shape["__rows"], shape["__cols"], shape["__cells"]
+    if cells != rows * cols:
+        raise ValueError(
+            f"{op}: ragged panel — {cells} ({row}, {col}) cells for "
+            f"{rows} {row}s x {cols} {col}s; every {row} must {verb} "
+            f"every {col}"
+        )
+    return obs, rows, cols, shape
+
+
 def cochran_q(
     df: DataFrame,
     unit_col: str,
@@ -2775,22 +2855,12 @@ def cochran_q(
     key domains), two 1-row reduces joined by broadcast. Returns one
     row ``(n_units, k_treatments, total_successes, q_stat, df)``.
     """
-    cells = (
-        df.where(
-            F.col(unit_col).isNotNull()
-            & F.col(treatment_col).isNotNull()
-            # filter on the CAST value (the decile_lift convention): a
-            # non-NULL outcome that casts to NULL boolean must be
-            # excluded, not silently dropped from the MAX inside a cell
-            & F.col(outcome_col).cast("boolean").isNotNull()
-        )
-        .groupBy(
-            F.col(unit_col).alias("__u"), F.col(treatment_col).alias("__j")
-        )
-        .agg(
-            F.max(F.col(outcome_col).cast("boolean").cast("int")).alias("__x")
-        )
-        .localCheckpoint(eager=True)
+    cells = _panel_cells(
+        df,
+        unit_col,
+        treatment_col,
+        F.col(outcome_col).cast("boolean").cast("int"),
+        ("__u", "__j", "__x"),
     )
     per_t = cells.groupBy("__j").agg(F.sum("__x").alias("__cj"))
     per_u = cells.groupBy("__u").agg(F.sum("__x").alias("__ri"))
@@ -2923,16 +2993,9 @@ def kendalls_w(
 
     over rater j's tie runs of length t.
 
-    Complete-panel contract (the fleiss_kappa convention): every rater
-    must score every item exactly once — duplicates collapse by MAX
-    first, then a ragged panel fail-fasts with a clear error (silently
-    dropping items would bias S). The validation is a 1-row shape
-    probe, so THIS OPERATOR EXECUTES SPARK JOBS EAGERLY at
-    construction (the panel pin plus the probe), unlike the lazy
-    evaluation siblings. NULL rater/item/score rows are excluded.
-    Empty input returns the fail-closed 1-row NULL frame
-    ``(0, 0, NULL, NULL, NULL)`` rather than raising — only the
-    genuinely wrong ragged-panel shape throws. W is NULL when n < 2
+    Complete-panel contract: :func:`_complete_panel` (every rater
+    scores every item; it runs Spark jobs at construction). Empty
+    input returns ``(0, 0, NULL, NULL, NULL)``. W is NULL when n < 2
     or when every rater's scores are fully tied (the correction
     zeroes the denominator — nothing is ranked; fail-closed).
 
@@ -2949,34 +3012,14 @@ def kendalls_w(
     1-row reduces meeting by broadcast. Returns one row
     ``(m_raters, n_items, s_stat, tie_correction, w)``.
     """
-    obs = (
-        df.where(
-            F.col(rater_col).isNotNull()
-            & F.col(item_col).isNotNull()
-            & F.col(score_col).isNotNull()
-        )
-        .groupBy(F.col(rater_col).alias("__j"), F.col(item_col).alias("__i"))
-        .agg(F.max(F.col(score_col).cast("double")).alias("__s"))
-        .localCheckpoint(eager=True)
+    obs, m, n, _ = _complete_panel(
+        df, "kendalls_w", rater_col, item_col, score_col, _RATER_PANEL
     )
-    shape = obs.agg(
-        F.countDistinct("__j").alias("__m"),
-        F.countDistinct("__i").alias("__n"),
-        F.count(F.lit(1)).alias("__cells"),
-    ).first()
-    m, n, cells = shape["__m"], shape["__n"], shape["__cells"]
     if m == 0:
-        return df.sparkSession.range(1).select(
-            F.lit(0).cast("long").alias("m_raters"),
-            F.lit(0).cast("long").alias("n_items"),
-            F.lit(None).cast("double").alias("s_stat"),
-            F.lit(None).cast("double").alias("tie_correction"),
-            F.lit(None).cast("double").alias("w"),
-        )
-    if cells != m * n:
-        raise ValueError(
-            f"kendalls_w: ragged panel — {cells} (rater, item) cells for "
-            f"{m} raters x {n} items; every rater must score every item"
+        return df.sparkSession.createDataFrame(
+            [(0, 0, None, None, None)],
+            "m_raters long, n_items long, s_stat double, "
+            "tie_correction double, w double",
         )
     ranked = rank_cells(obs, ["__j"], "__s")
     with_ranks = obs.join(
@@ -3132,12 +3175,10 @@ def friedman_test(
     treatment differences; chi2_r = n (k-1) W on tie-free panels,
     a cross-check the tests assert).
 
-    Complete-panel contract (the kendalls_w convention): every block
-    must hold every treatment exactly once — duplicates collapse by
-    MAX first, then a ragged panel fail-fasts (the panel pin and
-    1-row probe run EAGERLY at construction, see the module laziness
-    note). Empty input returns the fail-closed 1-row NULL frame.
-    chi2_r is NULL when k < 2 or all blocks fully tied (C = 0).
+    Complete-panel contract: :func:`_complete_panel` (every block
+    holds every treatment; it runs Spark jobs at construction). Empty
+    input returns the 1-row NULL frame. chi2_r is NULL when k < 2 or
+    all blocks fully tied (C = 0).
 
     Cross-engine determinism: midranks are
     :func:`~mr_dice_spark.operators.ranks.rank_cells` doubled midranks
@@ -3152,38 +3193,14 @@ def friedman_test(
     broadcast. Returns ``(n_blocks, k_treatments, s_stat,
     tie_correction, chi2_r, df)``.
     """
-    obs = (
-        df.where(
-            F.col(block_col).isNotNull()
-            & F.col(treatment_col).isNotNull()
-            & F.col(value_col).isNotNull()
-        )
-        .groupBy(
-            F.col(block_col).alias("__b"), F.col(treatment_col).alias("__t")
-        )
-        .agg(F.max(F.col(value_col).cast("double")).alias("__s"))
-        .localCheckpoint(eager=True)
+    obs, n, k, _ = _complete_panel(
+        df, "friedman_test", block_col, treatment_col, value_col, _BLOCK_PANEL
     )
-    shape = obs.agg(
-        F.countDistinct("__b").alias("__n"),
-        F.countDistinct("__t").alias("__k"),
-        F.count(F.lit(1)).alias("__cells"),
-    ).first()
-    n, k, cells = shape["__n"], shape["__k"], shape["__cells"]
     if n == 0:
-        return df.sparkSession.range(1).select(
-            F.lit(0).cast("long").alias("n_blocks"),
-            F.lit(0).cast("long").alias("k_treatments"),
-            F.lit(None).cast("double").alias("s_stat"),
-            F.lit(None).cast("double").alias("tie_correction"),
-            F.lit(None).cast("double").alias("chi2_r"),
-            F.lit(None).cast("long").alias("df"),
-        )
-    if cells != n * k:
-        raise ValueError(
-            f"friedman_test: ragged panel — {cells} (block, treatment) "
-            f"cells for {n} blocks x {k} treatments; every block must "
-            "hold every treatment"
+        return df.sparkSession.createDataFrame(
+            [(0, 0, None, None, None, None)],
+            "n_blocks long, k_treatments long, s_stat double, "
+            "tie_correction double, chi2_r double, df long",
         )
     ranked = rank_cells(obs, ["__b"], "__s")
     with_ranks = obs.join(
@@ -3247,12 +3264,14 @@ def icc_two_way(
     disagreement is pure rater bias (a miscalibrated judge/model)
     versus noise.
 
-    Complete-panel contract (the kendalls_w convention): duplicates
-    collapse by MAX, ragged panels fail fast, the shape probe runs
-    EAGERLY (module laziness note; the grand mean rides the same 1-row
-    reduce, so construction runs two eager jobs total — checkpoint +
-    probe), empty input returns the 1-row NULL frame. ICCs are NULL
-    when n < 2, k < 2, or the denominator is 0 (all scores identical).
+    Complete-panel contract: :func:`_complete_panel` (every rater
+    scores every item). The grand mean and the largest |score| ride its
+    shape probe, so construction runs two actions — the pin and the
+    probe — which are 8 Spark jobs on the golden panel (each shuffle
+    stage of an action is its own job under AQE). Scores must be
+    finite with |s| < 1e10: NaN or +-Inf raises ``ValueError``.
+    Empty input returns the 1-row NULL frame. ICCs are NULL when
+    n < 2, k < 2, or the denominator is 0 (all scores identical).
 
     Cross-engine determinism: per-item/per-rater/grand means pin at
     9dp before squaring; the three SS are sums of fixed IEEE squares
@@ -3263,58 +3282,37 @@ def icc_two_way(
     no windows at all. Returns ``(n_items, k_raters, ms_rows, ms_cols,
     ms_err, icc2_1, icc3_1)``.
     """
-    obs = (
-        df.where(
-            F.col(rater_col).isNotNull()
-            & F.col(item_col).isNotNull()
-            & F.col(score_col).isNotNull()
-        )
-        .groupBy(F.col(rater_col).alias("__j"), F.col(item_col).alias("__i"))
-        .agg(F.max(F.col(score_col).cast("double")).alias("__s"))
-        .localCheckpoint(eager=True)
-    )
     # decimal means (the durbin_watson convention): float AVG depends on
     # shuffle arrival order in its sum; the decimal sum is
     # order-invariant and engine-invariant. Contract: scores on a
     # <= 6dp grid, |s| < 1e10.
+    def pin9(x):
+        return F.round(x + F.lit(1e-12), 9)
+
     sd = F.col("__s").cast("decimal(16,6)")
-    cnt_d = F.count(F.lit(1)).cast("double")
-    # the grand mean rides the shape probe (one eager job, not two —
-    # ADVICE r9): both are 1-row reduces over the same checkpointed obs
-    shape = obs.agg(
-        F.countDistinct("__j").alias("__k"),
-        F.countDistinct("__i").alias("__n"),
-        F.count(F.lit(1)).alias("__cells"),
-        F.round(F.sum(sd).cast("double") / cnt_d + F.lit(1e-12), 9).alias(
-            "__g"
-        ),
-    ).first()
-    k, n, cells = shape["__k"], shape["__n"], shape["__cells"]
+    mean9 = pin9(F.sum(sd).cast("double") / F.count(F.lit(1)).cast("double"))
+    # the grand mean and the largest |score| ride the shape probe (one
+    # eager job, not two — ADVICE r9)
+    obs, k, n, shape = _complete_panel(
+        df, "icc_two_way", rater_col, item_col, score_col, _RATER_PANEL,
+        __g=mean9, __amax=F.max(F.abs("__s")),
+    )
     if k == 0:
-        return df.sparkSession.range(1).select(
-            F.lit(0).cast("long").alias("n_items"),
-            F.lit(0).cast("long").alias("k_raters"),
-            F.lit(None).cast("double").alias("ms_rows"),
-            F.lit(None).cast("double").alias("ms_cols"),
-            F.lit(None).cast("double").alias("ms_err"),
-            F.lit(None).cast("double").alias("icc2_1"),
-            F.lit(None).cast("double").alias("icc3_1"),
+        return df.sparkSession.createDataFrame(
+            [(0, 0, None, None, None, None, None)],
+            "n_items long, k_raters long, ms_rows double, ms_cols double, "
+            "ms_err double, icc2_1 double, icc3_1 double",
         )
-    if cells != n * k:
+    # NaN and +-Inf cast to a NULL decimal: the cell would still count
+    # while its score dropped out of every sum (max(|s|) is NaN if any
+    # score is NaN, so one comparison catches all three)
+    if not shape["__amax"] < 1e10:
         raise ValueError(
-            f"icc_two_way: ragged panel — {cells} (rater, item) cells for "
-            f"{k} raters x {n} items; every rater must score every item"
+            "icc_two_way: scores must be finite with |s| < 1e10 "
+            f"(max |s| = {shape['__amax']})"
         )
-    item_means = obs.groupBy("__i").agg(
-        F.round(
-            F.sum(sd).cast("double") / cnt_d + F.lit(1e-12), 9
-        ).alias("__im")
-    )
-    rater_means = obs.groupBy("__j").agg(
-        F.round(
-            F.sum(sd).cast("double") / cnt_d + F.lit(1e-12), 9
-        ).alias("__jm")
-    )
+    item_means = obs.groupBy("__i").agg(mean9.alias("__im"))
+    rater_means = obs.groupBy("__j").agg(mean9.alias("__jm"))
     grand = float(shape["__g"])
 
     def _dev2(col):
@@ -3322,18 +3320,12 @@ def icc_two_way(
         return F.sum(d * d).cast("double")
 
     ssr_row = item_means.agg(
-        F.round(
-            F.lit(float(k)) * _dev2(F.col("__im")) + F.lit(1e-12), 9
-        ).alias("__ssr")
+        pin9(F.lit(float(k)) * _dev2(F.col("__im"))).alias("__ssr")
     )
     ssc_row = rater_means.agg(
-        F.round(
-            F.lit(float(n)) * _dev2(F.col("__jm")) + F.lit(1e-12), 9
-        ).alias("__ssc")
+        pin9(F.lit(float(n)) * _dev2(F.col("__jm"))).alias("__ssc")
     )
-    sst_row = obs.agg(
-        F.round(_dev2(F.col("__s")) + F.lit(1e-12), 9).alias("__sst")
-    )
+    sst_row = obs.agg(pin9(_dev2(F.col("__s"))).alias("__sst"))
     joined = ssr_row.crossJoin(F.broadcast(ssc_row)).crossJoin(
         F.broadcast(sst_row)
     )
@@ -4151,11 +4143,9 @@ def quade_test(
 
     F ~ F(k-1, (n-1)(k-1)) under exchangeable treatments.
 
-    Complete-panel contract (the friedman_test convention): every
-    block must hold every treatment exactly once — duplicates collapse
-    by MAX first, then a ragged panel fail-fasts (the panel pin and
-    1-row probe run EAGERLY at construction). Empty input returns the
-    fail-closed 1-row NULL frame. f_stat is NULL when k < 2 or A = B
+    Complete-panel contract: :func:`_complete_panel` (every block
+    holds every treatment; it runs Spark jobs at construction). Empty
+    input returns the 1-row NULL frame. f_stat is NULL when k < 2 or A = B
     (perfect cross-block agreement — F is infinite; fail-closed, like
     Friedman's C = 0).
 
@@ -4181,39 +4171,14 @@ def quade_test(
     reference engine at NingWang-art/Mr-Dice has no hypothesis-test
     surface).
     """
-    obs = (
-        df.where(
-            F.col(block_col).isNotNull()
-            & F.col(treatment_col).isNotNull()
-            & F.col(value_col).isNotNull()
-        )
-        .groupBy(
-            F.col(block_col).alias("__b"), F.col(treatment_col).alias("__t")
-        )
-        .agg(F.max(F.col(value_col).cast("double")).alias("__s"))
-        .localCheckpoint(eager=True)
+    obs, n, k, _ = _complete_panel(
+        df, "quade_test", block_col, treatment_col, value_col, _BLOCK_PANEL
     )
-    shape = obs.agg(
-        F.countDistinct("__b").alias("__n"),
-        F.countDistinct("__t").alias("__k"),
-        F.count(F.lit(1)).alias("__cells"),
-    ).first()
-    n, k, cells = shape["__n"], shape["__k"], shape["__cells"]
     if n == 0:
-        return df.sparkSession.range(1).select(
-            F.lit(0).cast("long").alias("n_blocks"),
-            F.lit(0).cast("long").alias("k_treatments"),
-            F.lit(None).cast("double").alias("a_stat"),
-            F.lit(None).cast("double").alias("b_stat"),
-            F.lit(None).cast("double").alias("f_stat"),
-            F.lit(None).cast("long").alias("df1"),
-            F.lit(None).cast("long").alias("df2"),
-        )
-    if cells != n * k:
-        raise ValueError(
-            f"quade_test: ragged panel — {cells} (block, treatment) "
-            f"cells for {n} blocks x {k} treatments; every block must "
-            "hold every treatment"
+        return df.sparkSession.createDataFrame(
+            [(0, 0, None, None, None, None, None)],
+            "n_blocks long, k_treatments long, a_stat double, b_stat double, "
+            "f_stat double, df1 long, df2 long",
         )
     ranked = rank_cells(obs, ["__b"], "__s").select("__b", "__s", "__r2")
     with_ranks = obs.join(ranked, ["__b", "__s"])
@@ -4298,10 +4263,10 @@ def page_trend_test(
     tie-free panels (asserted in the tests). ``treatment_col`` must be
     orderable — its sort order IS the alternative.
 
-    Complete-panel contract (the friedman_test convention verbatim):
-    duplicates collapse by MAX, ragged panels fail fast, the shape
-    probe runs eagerly, empty input returns the 1-row NULL frame. z is
-    NULL when k < 2 or every block is fully tied (Var 0).
+    Complete-panel contract: :func:`_complete_panel` (every block
+    holds every treatment; it runs Spark jobs at construction). Empty
+    input returns the 1-row NULL frame. z is NULL when k < 2 or every
+    block is fully tied (Var 0).
 
     Cross-engine determinism: midranks are halved
     :func:`~mr_dice_spark.operators.ranks.rank_cells` doubled midranks
@@ -4315,38 +4280,15 @@ def page_trend_test(
     dimension (k rows), two closing reduces. Returns ``(n_blocks,
     k_treatments, l_stat, e_l, var_l, z)``.
     """
-    obs = (
-        df.where(
-            F.col(block_col).isNotNull()
-            & F.col(treatment_col).isNotNull()
-            & F.col(value_col).isNotNull()
-        )
-        .groupBy(
-            F.col(block_col).alias("__b"), F.col(treatment_col).alias("__t")
-        )
-        .agg(F.max(F.col(value_col).cast("double")).alias("__s"))
-        .localCheckpoint(eager=True)
+    obs, n, k, _ = _complete_panel(
+        df, "page_trend_test", block_col, treatment_col, value_col,
+        _BLOCK_PANEL,
     )
-    shape = obs.agg(
-        F.countDistinct("__b").alias("__n"),
-        F.countDistinct("__t").alias("__k"),
-        F.count(F.lit(1)).alias("__cells"),
-    ).first()
-    n, k, cells = shape["__n"], shape["__k"], shape["__cells"]
     if n == 0:
-        return df.sparkSession.range(1).select(
-            F.lit(0).cast("long").alias("n_blocks"),
-            F.lit(0).cast("long").alias("k_treatments"),
-            F.lit(None).cast("double").alias("l_stat"),
-            F.lit(None).cast("double").alias("e_l"),
-            F.lit(None).cast("double").alias("var_l"),
-            F.lit(None).cast("double").alias("z"),
-        )
-    if cells != n * k:
-        raise ValueError(
-            f"page_trend_test: ragged panel — {cells} (block, treatment) "
-            f"cells for {n} blocks x {k} treatments; every block must "
-            "hold every treatment"
+        return df.sparkSession.createDataFrame(
+            [(0, 0, None, None, None, None)],
+            "n_blocks long, k_treatments long, l_stat double, e_l double, "
+            "var_l double, z double",
         )
     ranked = rank_cells(obs, ["__b"], "__s").select(
         "__b", "__s", (F.col("__r2") / 2.0).alias("__r")

@@ -55,6 +55,10 @@ SENSITIVE = [
     "energy_dist_value_weekend_by_type",
     "kuiper_value_weekend_by_type",
     "ad_value_weekend_by_type",
+    # complete-panel consumers whose cells are not ranked: ICC's decimal
+    # means and cochran_q's exact success counts
+    "icc_user_bucket_value_by_type",
+    "cochran_q_high_value_types",
 ]
 
 

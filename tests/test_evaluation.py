@@ -2187,3 +2187,98 @@ def test_stuart_maxwell_vs_bowker_direction(spark):
     got = {r["k"]: r for r in stuart_maxwell_3(df, "k", "a", "b").collect()}
     assert got["sym"]["chi2"] == pytest.approx(0.0, abs=1e-9)
     assert got["drift"]["chi2"] > 5.99  # chi2_{2, 0.05} critical value
+
+
+# ---------------------------------------------------------------------------
+# Complete-panel contract (evaluation._complete_panel and its cell half
+# _panel_cells, shared by the blocked-design and agreement tests)
+# ---------------------------------------------------------------------------
+
+# each panel operator's output columns; every one is called as
+# op(df, row_col, col_col, value_col)
+_PANEL = {
+    "kendalls_w": ["m_raters", "n_items", "s_stat", "tie_correction", "w"],
+    "friedman_test": [
+        "n_blocks", "k_treatments", "s_stat", "tie_correction", "chi2_r", "df",
+    ],
+    "icc_two_way": [
+        "n_items", "k_raters", "ms_rows", "ms_cols", "ms_err", "icc2_1",
+        "icc3_1",
+    ],
+    "quade_test": [
+        "n_blocks", "k_treatments", "a_stat", "b_stat", "f_stat", "df1", "df2",
+    ],
+    "page_trend_test": [
+        "n_blocks", "k_treatments", "l_stat", "e_l", "var_l", "z",
+    ],
+}
+_PANEL_VALUES = {"a": (1, 3, 2, 5), "b": (2, 4, 1, 6), "c": (0, 2, 3, 7)}
+
+
+def _panel_rows(name):
+    """A complete 3 x 4 panel; cochran_q reads each value's parity."""
+    binary = name == "cochran_q"
+    return [
+        (r, c, float(v % 2 if binary else v))
+        for r, vs in _PANEL_VALUES.items()
+        for c, v in enumerate(vs, 1)
+    ]
+
+
+def _run_panel(spark, name, rows):
+    from mr_dice_spark.operators import evaluation
+
+    df = spark.createDataFrame(rows, "r string, c long, v double")
+    return getattr(evaluation, name)(df, "r", "c", "v")
+
+
+@pytest.mark.parametrize("name", sorted(_PANEL) + ["cochran_q"])
+def test_panel_lower_duplicates_change_nothing(spark, name):
+    """Duplicate (row, col) observations collapse by MAX: adding a
+    lower (or, for a 0 outcome, equal) copy of cells changes nothing."""
+    rows = _panel_rows(name)
+    lower = [(r, c, 0.0 if name == "cochran_q" else v - 1.0)
+             for r, c, v in rows[::3]]
+    clean = _run_panel(spark, name, rows).collect()
+    assert _run_panel(spark, name, rows + lower).collect() == clean
+
+
+@pytest.mark.parametrize("name", sorted(_PANEL) + ["cochran_q"])
+def test_panel_null_rows_change_nothing(spark, name):
+    """Rows with a NULL row, col or value are excluded — a row key seen
+    only with NULL values does not make the panel ragged."""
+    rows = _panel_rows(name)
+    noise = [(None, 1, 1.0), ("a", None, 1.0), ("a", 2, None), ("d", 1, None)]
+    clean = _run_panel(spark, name, rows).collect()
+    assert _run_panel(spark, name, rows + noise).collect() == clean
+
+
+@pytest.mark.parametrize("name", sorted(_PANEL))
+def test_panel_ragged_raises(spark, name):
+    with pytest.raises(ValueError, match=f"{name}: ragged panel"):
+        _run_panel(spark, name, _panel_rows(name)[1:])
+
+
+@pytest.mark.parametrize("name", sorted(_PANEL))
+def test_panel_empty_input_one_typed_null_row(spark, name):
+    """Empty input fails closed to one row with the non-empty output's
+    column names and types: zero counts, NULL statistics."""
+    full = _run_panel(spark, name, _panel_rows(name))
+    empty = _run_panel(spark, name, [])
+    assert full.columns == _PANEL[name]
+    assert empty.dtypes == full.dtypes
+    [row] = empty.collect()
+    assert tuple(row) == (0, 0) + (None,) * (len(_PANEL[name]) - 2)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_icc_two_way_non_finite_score_raises(spark, bad):
+    """A non-finite score casts to a NULL decimal: the cell would still
+    count while its score dropped out of every sum (NaN gave
+    ms_err = -2.25, icc3_1 = 3.57 on this panel)."""
+    from mr_dice_spark.operators.evaluation import icc_two_way
+
+    rows = [("a", 1, bad), ("a", 2, 2.0), ("b", 1, 1.0), ("b", 2, 3.0)]
+    df = spark.createDataFrame(rows, "j string, i long, s double")
+    with pytest.raises(ValueError, match="icc_two_way"):
+        icc_two_way(df, "j", "i", "s")

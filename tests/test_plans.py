@@ -1807,6 +1807,37 @@ def test_kendalls_w_pinned_panel_broadcast_close(spark, sf_dir):
             assert "windowspecdefinition(__j" in line, line
 
 
+# Spark jobs run while each golden's plan is BUILT, at sf0.01 with 8
+# shuffle partitions: the panel pin and the shape probe are two actions,
+# and under AQE every shuffle stage of an action is its own job;
+# cochran_q pins its cells and runs no probe
+_PANEL_CONSTRUCT_JOBS = {
+    "kendalls_w_bucket_rank_by_type": 8,
+    "friedman_weekday_value_by_type": 8,
+    "icc_user_bucket_value_by_type": 8,
+    "quade_weekday_value_by_type": 8,
+    "page_trend_weekly_by_weekday": 8,
+    "cochran_q_high_value_types": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PANEL_CONSTRUCT_JOBS))
+def test_panel_construct_jobs(spark, oracle_sf_dir, name):
+    sc = spark.sparkContext
+    # the table's first read in a session runs a footer job: keep it out
+    Catalog(spark, oracle_sf_dir).events
+    group = f"construct-{name}"
+    sc.setJobGroup(group, "panel construction")
+    try:
+        GOLDEN[name].spark(spark, oracle_sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == _PANEL_CONSTRUCT_JOBS[name]
+
+
 def test_uplift_curve_group_partitioned_single_exchange(spark, sf_dir):
     """The NTILE window partitions on the cohort (never a global sort);
     the per-user reduce and tile chain ride one pruned scan, no join."""
