@@ -144,7 +144,6 @@ def fetch_sql(
     spark: SparkSession,
     sql: str,
     n_results: int = 10,
-    enforce_limit: bool = True,
 ) -> FetchResult:
     """Validated read-only SQL execution with result-cap semantics.
 
@@ -154,10 +153,8 @@ def fetch_sql(
     try:
         clean = validate_sql_security(sql)
         _assert_pure_query(spark, clean)
-        df: DataFrame = spark.sql(clean)
-        if enforce_limit:
-            df = df.limit(n_results)
-        return wrap(df, max_rows=n_results if enforce_limit else 10**9)
+        df: DataFrame = spark.sql(clean).limit(n_results)
+        return wrap(df, max_rows=n_results)
     except SqlSecurityError as exc:
         return error(f"rejected: {exc}")
     except Exception as exc:  # noqa: BLE001 — envelope contract: never raise

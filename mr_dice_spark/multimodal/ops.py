@@ -314,19 +314,15 @@ def extract_frames(
     sampled: DataFrame,
     id_cols: Optional[list[str]] = None,
     payload_col: str = "payload",
-    broadcast_index: bool = True,
 ) -> DataFrame:
     """Second pass of the video pipeline: join sampled frame indices back to
     payloads and emit one (ids, frame_idx, frame_bytes) row per frame.
 
     Plan shape: the (ids, frame_idx) table is tiny RELATIVE to payloads but
-    grows with the corpus — one row per video. ``broadcast_index=True``
-    (default) broadcasts it, right for up to tens of millions of videos;
-    at billions the index outgrows broadcast/driver limits — pass False to
-    take a key-shuffled join (or pre-bucket both tables on the id for a
-    shuffle-free one). Either way the payload table is scanned ONCE, and
-    each partition's mapInPandas call slices all of its videos' requested
-    frames in one Arrow batch.
+    grows with the corpus — one row per video. It is broadcast, which is
+    right for up to tens of millions of videos. The payload table is
+    scanned ONCE, and each partition's mapInPandas call slices all of its
+    videos' requested frames in one Arrow batch.
 
     frame_bytes semantics: for MP4 payloads with a sample table
     (stsz/stsc/stco) and AVI payloads with a movi section (00dc/00db
@@ -343,7 +339,7 @@ def extract_frames(
         F.sort_array(F.collect_list("frame_idx")).alias("__idxs")
     )
     pruned = probed_with_payload.select(*id_cols, payload_col)
-    joined = pruned.join(F.broadcast(frames) if broadcast_index else frames, id_cols)
+    joined = pruned.join(F.broadcast(frames), id_cols)
     id_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in pruned.schema.fields
         if f.name != payload_col

@@ -3269,7 +3269,8 @@ def icc_two_way(
     shape probe, so construction runs two actions — the pin and the
     probe — which are 8 Spark jobs on the golden panel (each shuffle
     stage of an action is its own job under AQE). Scores must be
-    finite with |s| < 1e10: NaN or +-Inf raises ``ValueError``.
+    finite with |s| < 1e10: NaN, +-Inf or a larger score raises
+    ``ValueError``.
     Empty input returns the 1-row NULL frame. ICCs are NULL when
     n < 2, k < 2, or the denominator is 0 (all scores identical).
 
@@ -3289,7 +3290,9 @@ def icc_two_way(
     def pin9(x):
         return F.round(x + F.lit(1e-12), 9)
 
-    sd = F.col("__s").cast("decimal(16,6)")
+    # try_cast: an out-of-range score gives NULL instead of an ANSI
+    # overflow inside the probe, so the |s| check below can name it
+    sd = F.col("__s").try_cast("decimal(16,6)")
     mean9 = pin9(F.sum(sd).cast("double") / F.count(F.lit(1)).cast("double"))
     # the grand mean and the largest |score| ride the shape probe (one
     # eager job, not two — ADVICE r9)
@@ -3303,9 +3306,9 @@ def icc_two_way(
             "n_items long, k_raters long, ms_rows double, ms_cols double, "
             "ms_err double, icc2_1 double, icc3_1 double",
         )
-    # NaN and +-Inf cast to a NULL decimal: the cell would still count
-    # while its score dropped out of every sum (max(|s|) is NaN if any
-    # score is NaN, so one comparison catches all three)
+    # NaN, +-Inf and |s| >= 1e10 cast to a NULL decimal: the cell would
+    # still count while its score dropped out of every sum (max(|s|) is
+    # NaN if any score is NaN, so one comparison catches them all)
     if not shape["__amax"] < 1e10:
         raise ValueError(
             "icc_two_way: scores must be finite with |s| < 1e10 "

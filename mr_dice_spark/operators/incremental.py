@@ -200,7 +200,6 @@ def dedup_incremental(
     index_path: str,
     threshold: float = 0.8,
     append_survivors: bool = True,
-    check_id_reuse: bool = True,
 ) -> DataFrame:
     """Dedup ``new_df`` against the persisted index AND within itself;
     optionally append the survivors' state to the index.
@@ -222,25 +221,23 @@ def dedup_incremental(
     """
     spark = new_df.sparkSession
     params = _read_params(spark, index_path)
-    if check_id_reuse:
-        # duplicate ids WITHIN the batch would min-merge into one chimera
-        # signature matching neither document (groupBy in the signature
-        # aggregate), silently corrupting the index — the intra-batch form
-        # of the cross-batch id-reuse bug rejected below. Same opt-out,
-        # same cost rationale.
-        dup_ids = [
-            r[0]
-            for r in new_df.groupBy(id_col)
-            .count()
-            .where(F.col("count") > 1)
-            .limit(5)
-            .collect()
-        ]
-        if dup_ids:
-            raise ValueError(
-                f"duplicate id(s) within batch: {dup_ids}; "
-                "ids must be unique within a batch"
-            )
+    # duplicate ids WITHIN the batch would min-merge into one chimera
+    # signature matching neither document (groupBy in the signature
+    # aggregate), silently corrupting the index — the intra-batch form of
+    # the cross-batch id-reuse bug rejected below. COST: one eager job.
+    dup_ids = [
+        r[0]
+        for r in new_df.groupBy(id_col)
+        .count()
+        .where(F.col("count") > 1)
+        .limit(5)
+        .collect()
+    ]
+    if dup_ids:
+        raise ValueError(
+            f"duplicate id(s) within batch: {dup_ids}; "
+            "ids must be unique within a batch"
+        )
     sig = _batch_signatures(new_df, id_col, text_col, params)
     sig = sig.localCheckpoint(eager=True)  # reused: vs-index, within-batch, append
     keys = _band_key_rows(sig, params)
@@ -255,10 +252,8 @@ def dedup_incremental(
         # is already indexed with a DIFFERENT signature is id reuse (a
         # pipeline bug): failing loudly beats silently admitting the row
         # while never indexing its content. COST: one extra eager
-        # index-scan+join job per batch; pipelines whose ids are globally
-        # unique by construction (UUIDs, (source, offset) keys) can pass
-        # check_id_reuse=False to skip it.
-        collisions = [] if not check_id_reuse else [
+        # index-scan+join job per batch.
+        collisions = [
             r[0]
             for r in sig.alias("n")
             .join(idx_sig.alias("i"), F.col("n.__id") == F.col("i.__id"))

@@ -9,9 +9,8 @@ two-level aggregate with map-side combine (distinct (line, doc) then count
 per line) and is typically a small fraction of the corpus, so AQE broadcasts
 it into the anti-join; the rebuild is one aggregate keyed on the doc id with
 an in-group ``array_sort`` by position (never a global sort). The exploded
-lines feed both the duplicate census and the anti-join — ``persist_lines``
-caches them to avoid re-exploding the corpus (same trade as
-``tfidf_top_terms(persist_tf=True)``).
+lines feed both the duplicate census and the anti-join, so the corpus is
+exploded twice.
 """
 
 from __future__ import annotations
@@ -26,7 +25,6 @@ def line_dedup(
     text_col: str,
     sep: str = "\n",
     min_docs: int = 2,
-    persist_lines: bool = False,
 ) -> DataFrame:
     """Remove lines shared by >= ``min_docs`` distinct documents; returns
     (id, text, n_lines_kept) with each document rebuilt from its surviving
@@ -43,10 +41,6 @@ def line_dedup(
         F.col(id_col).alias("__id"),
         F.posexplode(F.split(F.col(text_col), sep)).alias("__pos", "__line"),
     )
-    if persist_lines:
-        from pyspark.storagelevel import StorageLevel
-
-        lines = lines.persist(StorageLevel.MEMORY_AND_DISK)
     dup = (
         lines.where(F.col("__line") != "")
         .groupBy("__line")

@@ -101,7 +101,6 @@ def snapshot_diff(
 
 def profile_columns(
     df: DataFrame, cols: Sequence[str], exact: bool = True,
-    rsd: float | None = None,
 ) -> DataFrame:
     """Per-column profile in ONE corpus pass:
     ``(column, n_rows, n_null, null_frac, n_distinct)`` — one output row
@@ -110,22 +109,15 @@ def profile_columns(
     oracle states) pays the multi-distinct Expand (input replicated per
     profiled column before the shuffle — see module docstring), while
     ``exact=False`` swaps in approx_count_distinct (HLL++, ~5% relative
-    error at Spark's default rsd=0.05; pass ``rsd`` to tighten) and
-    keeps the pass a plain single-width aggregate — the right trade when
-    the profile feeds a dashboard rather than a reconciliation.
+    error at Spark's default rsd=0.05) and keeps the pass a plain
+    single-width aggregate — the right trade when the profile feeds a
+    dashboard rather than a reconciliation.
     ``null_frac`` is nudge-rounded to 6 places; a zero-row input yields
     NULL null_frac.
     """
     if not cols:
         raise ValueError("profile_columns: cols must be non-empty")
-    if rsd is not None and exact:
-        raise ValueError("profile_columns: rsd only applies when exact=False")
-    if exact:
-        nd = F.count_distinct
-    elif rsd is not None:
-        nd = lambda c: F.approx_count_distinct(c, rsd)  # noqa: E731
-    else:
-        nd = F.approx_count_distinct
+    nd = F.count_distinct if exact else F.approx_count_distinct
     aggs = []
     for c in cols:
         aggs += [

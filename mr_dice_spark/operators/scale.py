@@ -16,18 +16,17 @@ costs nothing on big inputs and fixes the pathological small-input case
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, min_partitions: Optional[int] = None) -> DataFrame:
-    """Round-robin repartition up to ``min_partitions`` (default: the
-    session's default parallelism) iff the plan currently has fewer
-    partitions. Call it on the narrowest projection (ids + the column the
-    heavy expression consumes) so the shuffle moves minimal bytes."""
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition up to the session's default parallelism iff
+    the plan currently has fewer partitions. Call it on the narrowest
+    projection (ids + the column the heavy expression consumes) so the
+    shuffle moves minimal bytes."""
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     # decide from scan metadata, never df.rdd: materializing the RDD under
     # AQE EXECUTES all upstream shuffle stages eagerly just to read a
     # partition count, and that work is re-done by the real action

@@ -21,8 +21,6 @@ def tfidf_top_terms(
     text_col: str,
     k: int = 5,
     rational_idf: bool = False,
-    persist_tf: bool = False,
-    broadcast_df: bool = True,
 ) -> DataFrame:
     """Top-``k`` TF-IDF terms per document: (id, term, score, rank).
 
@@ -34,32 +32,20 @@ def tfidf_top_terms(
     implementations may differ in the last ulp across libms, which a
     hash-compare would see. Ranking ties (identical scores) break on term
     order, so top-k membership is deterministic on both engines.
-
-    ``broadcast_df=False`` joins the document-frequency dimension with a
-    token-keyed shuffle instead of a broadcast — required when the distinct
-    -token vocabulary (typos, URLs, ids on a web corpus) outgrows the
-    broadcast/driver limits; same escape hatch as ``unigram_lm_score``.
     """
     # The TF aggregate feeds BOTH the scores and the document-frequency
-    # dimension; without persistence Catalyst recomputes its lineage (a
-    # second full corpus scan). persist_tf=True caches the (doc, term, tf)
-    # aggregate — corpus-sized but far smaller than raw text — trading
-    # executor storage for the second scan at 100 TB.
+    # dimension, so Catalyst plans its lineage twice (two corpus scans).
     toks = df.select(
         F.col(id_col).alias("__id"),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__t"),
     ).where(F.col("__t") != "")
     tf = toks.groupBy("__id", "__t").agg(F.count(F.lit(1)).alias("tf"))
-    if persist_tf:
-        from pyspark.storagelevel import StorageLevel
-
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
     dfreq = tf.groupBy("__t").agg(F.count(F.lit(1)).alias("df"))
     n = df.select(F.count(F.lit(1)).cast("double").alias("__n"))
     ratio = (F.col("__n") + 1.0) / (F.col("df") + F.lit(1.0))
     idf = ratio if rational_idf else (F.log(ratio) + 1.0)
     scored = (
-        tf.join(F.broadcast(dfreq) if broadcast_df else dfreq, "__t")
+        tf.join(F.broadcast(dfreq), "__t")
         .crossJoin(F.broadcast(n))
         .select("__id", "__t", (F.col("tf") * idf).alias("__score"))
     )
@@ -81,8 +67,6 @@ def unigram_lm_score(
     id_col: str,
     text_col: str,
     vocab: DataFrame | None = None,
-    broadcast_vocab: bool = True,
-    persist_counts: bool = False,
 ) -> DataFrame:
     """Per-document unigram language-model quality score — the CCNet/Dolma
     perplexity-filter shape with the corpus itself as the model. Returns
@@ -97,27 +81,19 @@ def unigram_lm_score(
 
     Scale shape (mirrors tfidf_top_terms): one (doc, token) aggregate with
     map-side combine keyed on the doc id; the vocabulary dimension is
-    vocabulary-sized, broadcast back by default (``broadcast_vocab=False``
-    falls back to a token-keyed shuffle join for vocabularies too large to
-    broadcast); the total-token count is a 1-row broadcast cross join.
-    Docs with no non-empty tokens are absent from the output.
+    vocabulary-sized and broadcast back; the total-token count is a 1-row
+    broadcast cross join. Docs with no non-empty tokens are absent from
+    the output.
 
     When self-training, the (doc, token) aggregate feeds the scores, the
-    vocabulary, AND the total — without persistence Catalyst recomputes its
-    lineage three times (three corpus scans + explodes).
-    ``persist_counts=True`` caches that aggregate (corpus-sized but far
-    smaller than raw text), cutting to one scan — the same trade as
-    ``tfidf_top_terms(persist_tf=True)`` at 100 TB.
+    vocabulary, AND the total — Catalyst plans its lineage three times
+    (three corpus scans + explodes).
     """
     toks = df.select(
         F.col(id_col).alias("__id"),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__t"),
     ).where(F.col("__t") != "")
     dw = toks.groupBy("__id", "__t").agg(F.count(F.lit(1)).alias("__c"))
-    if persist_counts:
-        from pyspark.storagelevel import StorageLevel
-
-        dw = dw.persist(StorageLevel.MEMORY_AND_DISK)
     if vocab is None:
         vocab = dw.groupBy("__t").agg(F.sum("__c").alias("__cw"))
     else:
@@ -126,9 +102,8 @@ def unigram_lm_score(
             F.col(vocab.columns[1]).cast("long").alias("__cw"),
         )
     tot = vocab.agg(F.sum("__cw").cast("double").alias("__n"))
-    vdim = F.broadcast(vocab) if broadcast_vocab else vocab
     scored = (
-        dw.join(vdim, "__t", "left")
+        dw.join(F.broadcast(vocab), "__t", "left")
         .crossJoin(F.broadcast(tot))
         .select(
             "__id",
@@ -150,7 +125,6 @@ def duplicate_span_stats(
     id_col: str,
     text_col: str,
     n: int = 8,
-    persist_grams: bool = False,
 ) -> DataFrame:
     """Per-document duplicated-span signal — the exact-substring-dedup
     statistic of Lee et al. ("Deduplicating Training Data Makes Language
@@ -166,8 +140,7 @@ def duplicate_span_stats(
     expands each duplicated start to ``n`` token positions and counts
     distinct (doc, position) — every corpus-sized shuffle is keyed on the
     doc id or the gram, never global. The gram stream feeds both census
-    and semi-join; ``persist_grams=True`` trades executor storage for the
-    second corpus scan (the ``persist_tf`` pattern)."""
+    and semi-join, so its lineage is planned twice."""
     from mr_dice_spark.operators.scale import fan_out
 
     words = fan_out(
@@ -193,10 +166,6 @@ def duplicate_span_stats(
     ).where(F.col("__s").isNotNull()).select(
         "__id", "__len", F.col("__s.pos").alias("__pos"), F.col("__s.g").alias("__g")
     )
-    if persist_grams:
-        from pyspark.storagelevel import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     dup = (
         grams.groupBy("__g")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -284,7 +253,6 @@ def bigram_lm_score(
     id_col: str,
     text_col: str,
     add_k: float = 0.5,
-    persist_counts: bool = False,
 ) -> DataFrame:
     """Per-document bigram language-model score — the next model order up
     from unigram_lm_score, so word ORDER finally matters: "the the the"
@@ -301,9 +269,8 @@ def bigram_lm_score(
     no positional window), then one (doc, w1, w2) aggregate; the bigram
     and context models grow with the corpus, so they join back by gram
     key (never broadcast — the decontaminate rule); V and totals are
-    1-row broadcast cross joins. ``persist_counts=True`` caches the
-    (doc, bigram) aggregate that otherwise feeds both the model and the
-    scores (two corpus scans -> one), the unigram_lm_score trade."""
+    1-row broadcast cross joins. The (doc, bigram) aggregate feeds both
+    the model and the scores, so its lineage is planned twice."""
     words = F.filter(
         F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != ""
     )
@@ -321,10 +288,6 @@ def bigram_lm_score(
         .groupBy("__id", "__a", "__b")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    if persist_counts:
-        from pyspark.storagelevel import StorageLevel
-
-        dw = dw.persist(StorageLevel.MEMORY_AND_DISK)
     cb = dw.groupBy("__a", "__b").agg(F.sum("__c").alias("__cb"))
     cu = cb.groupBy("__a").agg(F.sum("__cb").alias("__cu"))
     vocab = docs_w.select(F.explode("__w").alias("__t")).agg(

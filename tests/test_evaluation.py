@@ -2271,11 +2271,15 @@ def test_panel_empty_input_one_typed_null_row(spark, name):
     assert tuple(row) == (0, 0) + (None,) * (len(_PANEL[name]) - 2)
 
 
-@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+@pytest.mark.parametrize(
+    "bad", [float("nan"), float("inf"), float("-inf"), 1e12, -1e12]
+)
 def test_icc_two_way_non_finite_score_raises(spark, bad):
     """A non-finite score casts to a NULL decimal: the cell would still
     count while its score dropped out of every sum (NaN gave
-    ms_err = -2.25, icc3_1 = 3.57 on this panel)."""
+    ms_err = -2.25, icc3_1 = 3.57 on this panel). A finite score past
+    decimal(16,6) must raise the operator's ValueError, not Spark's
+    NUMERIC_VALUE_OUT_OF_RANGE from the shape probe."""
     from mr_dice_spark.operators.evaluation import icc_two_way
 
     rows = [("a", 1, bad), ("a", 2, 2.0), ("b", 1, 1.0), ("b", 2, 3.0)]

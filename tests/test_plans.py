@@ -112,6 +112,30 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     assert all(r["share"] >= 0.05 for r in hk.collect())
 
 
+def test_fan_out_widens_small_scan_to_default_parallelism(spark, tmp_path):
+    """A one-file parquet scan (fewer splits than cores) is round-robined
+    up to defaultParallelism before the heavy expressions run."""
+    from mr_dice_spark.operators.scale import fan_out
+
+    path = str(tmp_path / "one_file")
+    spark.range(1000).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    target = spark.sparkContext.defaultParallelism
+    assert len(scan.inputFiles()) == 1
+    assert scan.rdd.getNumPartitions() < target
+    assert fan_out(scan).rdd.getNumPartitions() == target
+
+
+def test_fan_out_leaves_post_shuffle_frame_unchanged(spark):
+    """A frame with no inputFiles() (derived, post-shuffle lineage) already
+    carries shuffle-partition parallelism: fan_out returns it as is."""
+    from mr_dice_spark.operators.scale import fan_out
+
+    agg = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    assert agg.inputFiles() == []
+    assert fan_out(agg) is agg
+
+
 def test_interval_join_is_not_nested_loop(spark, sf_dir):
     df = GOLDEN["interval_join_error_windows"].spark(spark, sf_dir)
     assert not has_cartesian(df)
