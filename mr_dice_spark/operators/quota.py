@@ -18,16 +18,28 @@ Invariants (property-tested in tests/test_quota.py):
 * plan[c][u] <= stats[c][u] for every cell
 * clause totals differ by <= 1 unless capacity-bound.
 
-The allocation is a pure function of the per-group COUNTS, so at scale the
-distributed form is: cheap count aggregate -> driver-side plan (dozens of
-groups) -> broadcast quota join -> per-group row_number filter. No data-size
-dependence on the driver beyond the group count.
+The allocation is a pure function of the per-group COUNTS, and it reads
+each count only up to ``n_results``: no cell can be granted more than the
+whole budget, so ``distribute_quota_fair(stats, n)`` equals the allocation
+over ``min(count, n)`` (property-tested too). A per-group top-``n`` window
+yields exactly that many rows per cell, so the distributed form is ONE
+pass over the source: the per-group top-``n`` candidates (rank bounded by
+a literal, which Spark prunes map-side as WindowGroupLimit) collected to
+the driver, the allocation over their per-cell counts, and a filter of
+the candidates by each cell's quota. The driver holds at most
+groups x ``n`` rows, the reference's own per-provider top-n shape.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from itertools import repeat
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from mr_dice_spark.operators.local import local_frame
 
 GroupStats = dict[str, dict[str, int]]
 
@@ -151,6 +163,19 @@ def distribute_quota_fair(stats: GroupStats, n_results: int) -> GroupStats:
     return plan
 
 
+def _quota_candidates(
+    df: DataFrame, keys: list[str], n_results: int, order_by: list
+) -> DataFrame:
+    """Each ``keys`` group's first ``n_results`` rows by ``order_by``,
+    ranked 1.. in ``__rn``: the one pass of fair_quota_topk that reads the
+    source. The LITERAL rank bound lets Spark prune every group map-side
+    (WindowGroupLimit) instead of shuffling whole groups."""
+    w = Window.partitionBy(*keys).orderBy(*order_by)
+    return df.withColumn("__rn", F.row_number().over(w)).where(
+        F.col("__rn") <= F.lit(int(n_results))
+    )
+
+
 def fair_quota_topk(
     df: DataFrame,
     clause_col: str,
@@ -159,66 +184,45 @@ def fair_quota_topk(
     order_by: list,
 ) -> DataFrame:
     """Distributed fair-quota top-k: the reference's count -> allocate ->
-    materialize-under-quota pipeline (Optimade_Server/server.py:123-161) as
-    one DataFrame transform.
+    materialize-under-quota pipeline (Optimade_Server/server.py:123-161)
+    as one DataFrame transform. ``url_col=None`` gives every clause a
+    single url.
 
     ``order_by`` defines the deterministic per-group priority (the reference
     relies on provider insertion order; a distributed engine must impose an
     explicit total order — SURVEY.md §7.3).
 
-    Scale shape: one cheap groupBy-count (collected: #groups rows, tiny),
-    driver-side pure allocation, broadcast join of the quota table, then a
-    single window row_number filter — one shuffle over the data.
+    Scale shape: one windowed pass over the source keeps each group's top
+    ``n_results`` rows and is collected as Arrow, so the driver holds at
+    most groups x ``n_results`` candidate rows (the reference's own
+    per-provider top-n shape). Each group's candidate count is
+    ``min(count, n_results)``, which is all the water-fill allocation reads;
+    the candidates within each group's quota come back as an Arrow-backed
+    LocalTableScan frame, which later actions read without a Spark job.
+    ``n_results <= 0`` returns an empty frame without running one.
     """
-    ucol = url_col
-    if ucol is None:
-        df = df.withColumn("__url", F.lit("_"))
-        ucol = "__url"
-
-    counts = df.groupBy(clause_col, ucol).count().collect()
-    # fail fast on NULL group keys: the quota join below is null-unsafe, so
-    # a NULL clause/url group would be ALLOCATED quota and then silently
-    # dropped by the join — under-filling the budget. Checked here on the
-    # already-collected counts (zero extra jobs).
-    for row in counts:
-        if row[clause_col] is None or row[ucol] is None:
-            raise ValueError(
-                f"fair_quota_topk: NULL in group keys "
-                f"({clause_col!r}/{ucol!r}); filter or coalesce them first"
-            )
-    stats: GroupStats = {}
-    for row in sorted(counts, key=lambda r: (str(r[clause_col]), str(r[ucol]))):
-        stats.setdefault(row[clause_col], {})[row[ucol]] = row["count"]
-    plan = distribute_quota_fair(stats, n_results)
-
-    quota_rows = [
-        (c, u, q) for c, urls in plan.items() for u, q in urls.items() if q > 0
-    ]
     spark = df.sparkSession
-    if not quota_rows:
-        # empty input or n_results <= 0: an empty quota table with an
-        # EXPLICIT schema (createDataFrame cannot infer types from [])
-        key_fields = [f for f in df.schema.fields if f.name in (clause_col, ucol)]
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema = StructType(key_fields + [StructField("__quota", LongType())])
-        quota_df = spark.createDataFrame([], schema)
-    else:
-        quota_df = spark.createDataFrame(quota_rows, [clause_col, ucol, "__quota"])
-
-    w = Window.partitionBy(clause_col, ucol).orderBy(*order_by)
-    # literal max-quota bound first: WindowGroupLimit needs a CONSTANT
-    # limit to prune per-group rows map-side — rank <= column alone would
-    # shuffle whole groups; the column comparison then applies each
-    # group's exact water-fill quota
-    max_q = max((q for _, _, q in quota_rows), default=0)
-    out = (
-        df.join(F.broadcast(quota_df), [clause_col, ucol])
-        .withColumn("__rn", F.row_number().over(w))
-        .where(
-            (F.col("__rn") <= F.lit(int(max_q)))
-            & (F.col("__rn") <= F.col("__quota"))
+    if n_results <= 0:
+        return local_frame(spark, [], df.schema)
+    keys = [clause_col] + ([url_col] if url_col else [])
+    cand = _quota_candidates(df, keys, n_results, order_by).toArrow()
+    # fail fast on NULL group keys: NULL names no provider, so a missing
+    # filter or coalesce upstream surfaces here instead of as budget
+    # handed to a NULL group
+    if any(cand.column(k).null_count for k in keys):
+        raise ValueError(
+            f"fair_quota_topk: NULL in group keys "
+            f"({', '.join(map(repr, keys))}); filter or coalesce them first"
         )
-        .drop("__rn", "__quota")
-    )
-    return out.drop("__url") if url_col is None else out
+    cells = list(zip(
+        cand.column(clause_col).to_pylist(),
+        cand.column(url_col).to_pylist() if url_col else repeat("_"),
+    ))
+    counts = Counter(cells)
+    stats: GroupStats = {}
+    for c, u in sorted(counts, key=lambda cu: (str(cu[0]), str(cu[1]))):
+        stats.setdefault(c, {})[u] = counts[c, u]
+    plan = distribute_quota_fair(stats, n_results)
+    rn = cand.column("__rn").to_pylist()
+    keep = pa.array([r <= plan[c][u] for (c, u), r in zip(cells, rn)], pa.bool_())
+    return spark.createDataFrame(cand.filter(keep).drop_columns(["__rn"]), df.schema)

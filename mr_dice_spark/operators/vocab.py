@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mr_dice_spark.functions.text import tokens
+from mr_dice_spark.operators.local import local_frame
 
 
 def bpe_pair_stats(
@@ -272,8 +273,8 @@ def bpe_train_merges(
         syms = syms.select("__f", fold.alias("__s")).localCheckpoint(
             eager=False
         )
-    return df.sparkSession.createDataFrame(
-        out, "rank int, left_sym string, right_sym string, pair_count long"
+    return local_frame(
+        df.sparkSession, out, "rank int, left_sym string, right_sym string, pair_count long"
     )
 
 

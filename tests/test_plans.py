@@ -39,9 +39,17 @@ def test_demo1_uses_broadcast_for_dims(spark, sf_dir):
     assert not has_cartesian(df)
 
 
+def _quota_events_candidates(spark, sf_dir):
+    """The pass of fair_quota_topk_events that reads the source; the
+    golden itself returns a LocalTableScan of the collected rows."""
+    from mr_dice_spark.operators.quota import _quota_candidates
+
+    ev = Catalog(spark, sf_dir).events
+    return _quota_candidates(ev, ["event_type"], 40, [F.asc("ts"), F.asc("event_id")])
+
+
 def test_quota_topk_no_cartesian(spark, sf_dir):
-    df = GOLDEN["fair_quota_topk_events"].spark(spark, sf_dir)
-    assert not has_cartesian(df)
+    assert not has_cartesian(_quota_events_candidates(spark, sf_dir))
 
 
 def test_point_lookup_is_one_scan_no_shuffle(spark, sf_dir):
@@ -750,11 +758,15 @@ def test_quality_bucketed_mixture_plan_shape(spark, sf_dir):
 
 
 def test_fair_quota_and_mixture_use_window_group_limit(spark, sf_dir):
-    """Per-group quota filters carry a LITERAL max-quota bound alongside
-    the per-group quota column so Spark prunes each group map-side
-    (WindowGroupLimit) instead of shuffling whole groups."""
-    for name in ("fair_quota_topk_events", "mixture_sample_by_lang"):
-        df = GOLDEN[name].spark(spark, sf_dir)
+    """Per-group quota filters carry a LITERAL rank bound (fair quota's
+    candidate pass; the mixture's max quota beside its per-group quota
+    column) so Spark prunes each group map-side (WindowGroupLimit)
+    instead of shuffling whole groups."""
+    frames = {
+        "fair_quota_topk_events": _quota_events_candidates(spark, sf_dir),
+        "mixture_sample_by_lang": GOLDEN["mixture_sample_by_lang"].spark(spark, sf_dir),
+    }
+    for name, df in frames.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "WindowGroupLimit" in plan, name
 

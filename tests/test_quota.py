@@ -49,6 +49,15 @@ def test_invariants(stats, n):
                 )
 
 
+@given(stats=stats_st, n=st.integers(min_value=0, max_value=60))
+@settings(max_examples=300, deadline=None)
+def test_allocation_reads_counts_only_up_to_budget(stats, n):
+    """fair_quota_topk allocates over each cell's top-n candidate count,
+    min(count, n): the plan must equal the one over the full counts."""
+    capped = {c: {u: min(k, n) for u, k in urls.items()} for c, urls in stats.items()}
+    assert distribute_quota_fair(stats, n) == distribute_quota_fair(capped, n)
+
+
 def test_equal_split_simple():
     plan = distribute_quota_fair({"a": {"u": 50}, "b": {"u": 50}}, 10)
     assert plan == {"a": {"u": 5}, "b": {"u": 5}}
@@ -98,6 +107,61 @@ def test_fair_quota_topk_distributed(spark, oracle_sf_dir):
     picked = sorted((r.ts, r.event_id) for r in rows if r.event_type == rows[0].event_type)
     expect = sorted((r.ts, r.event_id) for r in first.limit(8).collect())
     assert picked == expect
+
+
+def _counted(spark, group, fn):
+    """``fn()``'s result, the number of jobs it ran, and how many of their
+    stages read source rows."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    store = sc._jsc.sc().statusStore()
+    scans = sum(
+        store.lastStageAttempt(s).inputRecords() > 0
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    )
+    return out, len(jobs), scans
+
+
+def test_fair_quota_topk_scans_once_and_wraps_without_a_job(spark, oracle_sf_dir):
+    """One windowed pass reads the source: its shuffle and its Arrow
+    collect are the only jobs, and the Arrow-backed result wraps
+    without running one."""
+    from mr_dice_spark.catalog import Catalog
+    from mr_dice_spark.envelope import wrap
+    from pyspark.sql import functions as F
+
+    ev = Catalog(spark, oracle_sf_dir).events.where(F.col("value") >= 50)
+    order = [F.desc("value"), F.asc("event_id")]
+    out, jobs, scans = _counted(
+        spark, "quota-topk", lambda: fair_quota_topk(ev, "event_type", None, 30, order)
+    )
+    assert (jobs, scans) == (2, 1)
+    r, wrap_jobs, _ = _counted(spark, "quota-wrap", lambda: wrap(out))
+    assert wrap_jobs == 0
+    assert r.n_found == 30 and not r.truncated
+
+
+def test_fair_quota_topk_zero_budget_runs_no_job(spark, oracle_sf_dir):
+    from mr_dice_spark.catalog import Catalog
+    from pyspark.sql import functions as F
+
+    ev = Catalog(spark, oracle_sf_dir).events
+
+    def run():
+        out = fair_quota_topk(ev, "event_type", None, 0, [F.asc("event_id")])
+        return out.schema, out.collect()
+
+    (schema, rows), jobs, _ = _counted(spark, "quota-zero", run)
+    assert (schema, rows, jobs) == (ev.schema, [], 0)
 
 
 def test_fair_quota_topk_empty_input_returns_empty(spark):

@@ -17,6 +17,14 @@ Example: a before/after pair at sf0.01, "before" run in a checkout of the
 parent commit, "after" in the working tree:
   PLANS_TAG=r14 SPARK_GRAFT_SF_DIR=<testdata>/sf0.01 \
       python tools/capture_plans.py before demo9_selectivity_matrix
+
+Each capture writes the list of goldens it captured to
+plans/<tag>/<suffix>.goldens. A pair is only comparable when both sides
+captured the same list: expression ids, and with them the order of some
+projections (profile_columns' multi-distinct Expand), depend on what else
+the session planned before. So a "before" or "after" capture exits
+non-zero, before capturing anything, when the other side's list exists
+under the same tag and differs.
 """
 
 from __future__ import annotations
@@ -39,8 +47,6 @@ def main() -> None:
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            "plans", TAG)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name=f"capture-plans-{suffix}")
-    spark.sparkContext.setLogLevel("ERROR")
     allq = dict(bench_queries())
     allq.update(bench_extended_queries())
     if only:
@@ -53,10 +59,25 @@ def main() -> None:
                 "would otherwise produce a silently partial capture"
             )
         allq.update({n: GOLDEN[n] for n in only})
-    for name, g in sorted(allq.items()):
-        if only and name not in only:
-            continue
-        df = g.spark(spark, sf_dir)
+    names = sorted(n for n in allq if not only or n in only)
+    other = {"before": "after", "after": "before"}.get(suffix)
+    other_list = os.path.join(out_dir, f"{other}.goldens") if other else None
+    if other_list and os.path.exists(other_list):
+        with open(other_list) as fh:
+            theirs = fh.read().split()
+        if theirs != names:
+            raise SystemExit(
+                f"capture_plans: {suffix} would capture a different golden "
+                f"list than {other_list}: only in {suffix} "
+                f"{sorted(set(names) - set(theirs))}, only in {other} "
+                f"{sorted(set(theirs) - set(names))}"
+            )
+    with open(os.path.join(out_dir, f"{suffix}.goldens"), "w") as fh:
+        fh.write("".join(f"{n}\n" for n in names))
+    spark = get_spark(app_name=f"capture-plans-{suffix}")
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in names:
+        df = allq[name].spark(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # same text explain() prints
             df._jdf.queryExecution(), "formatted"
         )
