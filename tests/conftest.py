@@ -3,9 +3,13 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# perfbench's reader is the one place that reads Spark's status stores
+sys.path.append(os.path.join(ROOT, "perfbench"))
 
 from mr_dice_spark.session import get_spark  # noqa: E402
+from statusstore import StatusStore  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -15,6 +19,26 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 def spark():
     s = get_spark(app_name="mr-dice-tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+def run_counted(spark, group, fn):
+    """``fn()``'s result, the number of jobs it ran (under Spark job group
+    ``group``), and how many of their stages read source rows."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = StatusStore(spark)
+    store.settle()
+    jobs = [j for j in store.jobs() if j.group == group]
+    stages = store.stages()
+    scans = sum(
+        stages[s].input_rows > 0 for j in jobs for s in j.stage_ids if s in stages
+    )
+    return out, len(jobs), scans
 
 
 @pytest.fixture(scope="session")

@@ -7,6 +7,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import run_counted
 from mr_dice_spark.catalog import Catalog
 from mr_dice_spark.golden import GOLDEN
 from mr_dice_spark.plans.inspect import (
@@ -1859,19 +1860,12 @@ _PANEL_CONSTRUCT_JOBS = {
 
 @pytest.mark.parametrize("name", sorted(_PANEL_CONSTRUCT_JOBS))
 def test_panel_construct_jobs(spark, oracle_sf_dir, name):
-    sc = spark.sparkContext
     # the table's first read in a session runs a footer job: keep it out
     Catalog(spark, oracle_sf_dir).events
-    group = f"construct-{name}"
-    sc.setJobGroup(group, "panel construction")
-    try:
-        GOLDEN[name].spark(spark, oracle_sf_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == _PANEL_CONSTRUCT_JOBS[name]
+    _, jobs, _ = run_counted(
+        spark, f"construct-{name}", lambda: GOLDEN[name].spark(spark, oracle_sf_dir)
+    )
+    assert jobs == _PANEL_CONSTRUCT_JOBS[name]
 
 
 def test_uplift_curve_group_partitioned_single_exchange(spark, sf_dir):

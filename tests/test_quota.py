@@ -6,6 +6,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import run_counted
 from mr_dice_spark.operators.quota import distribute_quota_fair, fair_quota_topk
 
 stats_st = st.dictionaries(
@@ -109,28 +110,6 @@ def test_fair_quota_topk_distributed(spark, oracle_sf_dir):
     assert picked == expect
 
 
-def _counted(spark, group, fn):
-    """``fn()``'s result, the number of jobs it ran, and how many of their
-    stages read source rows."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    store = sc._jsc.sc().statusStore()
-    scans = sum(
-        store.lastStageAttempt(s).inputRecords() > 0
-        for j in jobs
-        for s in tracker.getJobInfo(j).stageIds
-    )
-    return out, len(jobs), scans
-
-
 def test_fair_quota_topk_scans_once_and_wraps_without_a_job(spark, oracle_sf_dir):
     """One windowed pass reads the source: its shuffle and its Arrow
     collect are the only jobs, and the Arrow-backed result wraps
@@ -141,11 +120,11 @@ def test_fair_quota_topk_scans_once_and_wraps_without_a_job(spark, oracle_sf_dir
 
     ev = Catalog(spark, oracle_sf_dir).events.where(F.col("value") >= 50)
     order = [F.desc("value"), F.asc("event_id")]
-    out, jobs, scans = _counted(
+    out, jobs, scans = run_counted(
         spark, "quota-topk", lambda: fair_quota_topk(ev, "event_type", None, 30, order)
     )
     assert (jobs, scans) == (2, 1)
-    r, wrap_jobs, _ = _counted(spark, "quota-wrap", lambda: wrap(out))
+    r, wrap_jobs, _ = run_counted(spark, "quota-wrap", lambda: wrap(out))
     assert wrap_jobs == 0
     assert r.n_found == 30 and not r.truncated
 
@@ -160,7 +139,7 @@ def test_fair_quota_topk_zero_budget_runs_no_job(spark, oracle_sf_dir):
         out = fair_quota_topk(ev, "event_type", None, 0, [F.asc("event_id")])
         return out.schema, out.collect()
 
-    (schema, rows), jobs, _ = _counted(spark, "quota-zero", run)
+    (schema, rows), jobs, _ = run_counted(spark, "quota-zero", run)
     assert (schema, rows, jobs) == (ev.schema, [], 0)
 
 
